@@ -181,16 +181,18 @@ class _Executor:
     def _label_counts(self) -> dict[str, int]:
         """Exact per-label-string vertex counts, memoized on the
         GraphSession (one groupBy job per session/state — labels are
-        few by data-model construction)."""
-        cache = getattr(self.g, "_label_count_cache", None)
+        few by data-model construction). The memo is taken before the
+        frame it counts, so a count racing a state swap lands in the
+        memo the swap discards (GraphSession._drop_read_memos)."""
+        stats = self.g._stats
+        cache = stats.get("labels")
         if cache is None:
-            cache = {
+            cache = stats["labels"] = {
                 r["label"]: r["n"]
                 for r in self.g.vertices.groupBy("label")
                 .agg(F.count("*").alias("n"))
                 .collect()
             }
-            self.g._label_count_cache = cache
         return cache
 
     def _node_bound(self, np: P.NodePattern) -> int:

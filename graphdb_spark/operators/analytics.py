@@ -4,9 +4,11 @@ on the engine's vertices/edges DataFrames (BASELINE.json north star:
 the DataFrame-native equivalents, so Catalyst/AQE apply).
 
 - ``pagerank``: iterative power method. Each iteration = one join
-  (ranks ⋈ edges) + one groupBy sum; lineage cut per iteration via
-  localCheckpoint. Dangling-node mass is redistributed uniformly so
-  ranks sum to N like GraphX's implementation.
+  (ranks ⋈ edges) + one groupBy sum, whose raw ranks are materialized
+  (localCheckpoint) before the in-plan normalizer reads them twice, so
+  the plan stays one iteration deep. Dangling-node mass is
+  redistributed uniformly so ranks sum to N like GraphX's
+  implementation.
 - ``triangle_count``: edge-iterator algorithm on the undirected
   projection — join edges with edges on shared endpoint, then semi-join
   the closing edge. Three shuffles total, no driver loops.
@@ -70,7 +72,7 @@ def pagerank(edges: DataFrame, iterations: int = 10,
     # exactly n rows, so broadcast it while provably small
     from graphdb_spark.operators.traversal import _maybe_broadcast
 
-    for i in range(iterations):
+    for _ in range(iterations):
         contribs = (
             links.join(
                 _maybe_broadcast(ranks.withColumnRenamed("id", "src"), n),
@@ -83,26 +85,24 @@ def pagerank(edges: DataFrame, iterations: int = 10,
             .groupBy("id")
             .agg(F.sum("c").alias("contrib"))
         )
-        new_ranks = verts.join(_maybe_broadcast(contribs, n), "id", "left").select(
+        # materialize BEFORE the normalizer (as hits()._norm does): the
+        # raw ranks feed both the 1-row total and the row-wise divide;
+        # unmaterialized, each iteration doubles the plan of all the
+        # earlier ones
+        raw = verts.join(_maybe_broadcast(contribs, n), "id", "left").select(
             "id",
             (
                 F.lit(1 - damping)
                 + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
             ).alias("rank"),
-        )
+        ).localCheckpoint(eager=True)
         # dangling mass: renormalize so sum(rank) == n (GraphX-like).
         # The 1-row total stays IN the plan (broadcast crossJoin) — no
-        # driver round-trip per iteration, so iterations pipeline into
-        # one job between checkpoints instead of 2×iterations jobs.
-        total = new_ranks.agg(F.sum("rank").alias("__total"))
-        new_ranks = new_ranks.crossJoin(F.broadcast(total)).select(
+        # driver round-trip per iteration.
+        total = raw.agg(F.sum("rank").alias("__total"))
+        ranks = raw.crossJoin(F.broadcast(total)).select(
             "id",
             (F.col("rank") * F.lit(float(n)) / F.col("__total")).alias("rank"),
-        )
-        ranks = (
-            new_ranks.localCheckpoint(eager=True)
-            if (i + 1) % CHECKPOINT_EVERY == 0 or i == iterations - 1
-            else new_ranks
         )
     return ranks
 

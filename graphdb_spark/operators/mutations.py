@@ -31,7 +31,7 @@ from graphdb_spark.datamodel import (
     normalize_properties,
     stringify_value,
 )
-from graphdb_spark.session import GraphSession
+from graphdb_spark.session import GraphSession, serialized
 
 
 class VertexExistsError(ValueError):
@@ -56,6 +56,7 @@ def _erow(spark, src, rel, dst, props):
     )
 
 
+@serialized
 def create_vertex(g: GraphSession, vid: str, label: str,
                   props: dict | None = None) -> GraphSession:
     if g.vertices.filter(F.col("id") == vid).limit(1).count() > 0:
@@ -66,6 +67,7 @@ def create_vertex(g: GraphSession, vid: str, label: str,
     return g.append_state(vertices=_vrow(g.spark, vid, label, props))
 
 
+@serialized
 def update_vertex(g: GraphSession, vid: str, label: str,
                   props: dict | None = None) -> GraphSession:
     """Upsert (inmemory_storage.rs:144-148): replace the whole row."""
@@ -73,6 +75,7 @@ def update_vertex(g: GraphSession, vid: str, label: str,
     return g.set_state(vertices=kept.unionByName(_vrow(g.spark, vid, label, props)))
 
 
+@serialized
 def create_edge(g: GraphSession, src: str, rel: str, dst: str,
                 props: dict | None = None, validate: bool = True) -> GraphSession:
     if validate:
@@ -95,6 +98,7 @@ def create_edge(g: GraphSession, src: str, rel: str, dst: str,
     return g
 
 
+@serialized
 def delete_vertices(g: GraphSession, ids_df: DataFrame) -> GraphSession:
     """Cascade delete: vertices + incident edges both directions
     (rdb/managers.rs:119-159 / DETACH DELETE)."""
@@ -108,12 +112,14 @@ def delete_vertices(g: GraphSession, ids_df: DataFrame) -> GraphSession:
     return g.set_state(vertices=v, edges=e)
 
 
+@serialized
 def delete_edges(g: GraphSession, edges_df: DataFrame) -> GraphSession:
     keys = edges_df.select("src", "relationship", "dst").distinct()
     e = g.edges.join(keys, ["src", "relationship", "dst"], "left_anti")
     return g.set_state(edges=e)
 
 
+@serialized
 def delete(g: GraphSession, q: A.Query) -> GraphSession:
     """delete(Query) — evaluate, then anti-join the base tables.
     Deleting a Count (or property output) raises like the reference
@@ -136,6 +142,7 @@ def _patch_expr(name: str, sval: str):
     )
 
 
+@serialized
 def set_vertex_properties_df(g: GraphSession, ids_df: DataFrame,
                              name: str, value) -> GraphSession:
     """DataFrame-first SET: mark matched ids via join (never a driver
@@ -149,6 +156,7 @@ def set_vertex_properties_df(g: GraphSession, ids_df: DataFrame,
     return g.set_state(vertices=v)
 
 
+@serialized
 def set_edge_properties_df(g: GraphSession, keys_df: DataFrame,
                            name: str, value) -> GraphSession:
     patch = _patch_expr(name, stringify_value(value))
@@ -162,6 +170,7 @@ def set_edge_properties_df(g: GraphSession, keys_df: DataFrame,
     return g.set_state(edges=e)
 
 
+@serialized
 def set_properties(g: GraphSession, q: A.Query, name: str, value) -> GraphSession:
     """Set one property on everything the query selects
     (rdb/datastore.rs:342-362)."""
@@ -173,6 +182,7 @@ def set_properties(g: GraphSession, q: A.Query, name: str, value) -> GraphSessio
     raise A.OperationOnQueryError(f"cannot set properties on a {kind.value} query")
 
 
+@serialized
 def remove_vertex_property_df(g: GraphSession, ids_df: DataFrame,
                               name: str) -> GraphSession:
     strip = F.map_filter(F.col("properties"), lambda k, _: k != F.lit(name))
@@ -184,6 +194,7 @@ def remove_vertex_property_df(g: GraphSession, ids_df: DataFrame,
     return g.set_state(vertices=v)
 
 
+@serialized
 def remove_edge_property_df(g: GraphSession, keys_df: DataFrame,
                             name: str) -> GraphSession:
     strip = F.map_filter(F.col("properties"), lambda k, _: k != F.lit(name))
@@ -197,6 +208,7 @@ def remove_edge_property_df(g: GraphSession, keys_df: DataFrame,
     return g.set_state(edges=e)
 
 
+@serialized
 def remove_property(g: GraphSession, q: A.Query, name: str) -> GraphSession:
     """REMOVE n.prop (queries_examples.txt:140-143)."""
     kind = q.output_type()
@@ -207,6 +219,7 @@ def remove_property(g: GraphSession, q: A.Query, name: str) -> GraphSession:
     raise A.OperationOnQueryError(f"cannot remove properties on a {kind.value} query")
 
 
+@serialized
 def bulk_insert(g: GraphSession, vertices: list[tuple] | None = None,
                 edges: list[tuple] | None = None) -> GraphSession:
     """Batched, validation-skipping insert (rdb/datastore.rs:285-310):

@@ -15,7 +15,14 @@ driver-embedded facade needs nothing more. The server answers from the
 Spark *driver* — the query itself still executes distributed; only the
 final ``limit``-bounded collect crosses to HTTP. Row limits are
 enforced with ``df.limit(n)`` BEFORE collecting, never an unbounded
-pull.
+pull; the limited frame is prepared once per plan-cached read
+(:func:`graphdb_spark.session.bounded`), so a repeated read reuses its
+physical plan and stages and runs as one Spark job.
+
+Statements that return no rows answer 200 with an empty result:
+mutations add their summary (``"summary"``: created/deleted counts),
+as does GraphQL's parse-only detection result; a KV ``GET`` answers
+one ``value`` column.
 
 Daemon management routes (daemon/start|stop|list, shutdown) are
 intentionally absent: they manage the reference's multi-process
@@ -29,7 +36,10 @@ import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from pyspark.sql import DataFrame
+
 from graphdb_spark import __version__ as _pkg_version
+from graphdb_spark.session import bounded
 
 DEFAULT_ROW_LIMIT = 1000
 
@@ -52,7 +62,7 @@ def _detect_language(q: str) -> str:
 
 
 def _df_payload(df, limit: int):
-    rows = df.limit(limit).collect()
+    rows = bounded(df, limit).collect()
     cols = df.columns
     return cols, [
         [None if v is None else (v if isinstance(v, (int, float, bool, str))
@@ -69,7 +79,7 @@ class _Handler(BaseHTTPRequestHandler):
         pass
 
     def _json(self, code: int, payload: dict):
-        body = json.dumps(payload).encode()
+        body = json.dumps(payload, default=str).encode()
         self.send_response(code)
         self.send_header("Content-Type", "application/json")
         self.send_header("Content-Length", str(len(body)))
@@ -99,12 +109,17 @@ class _Handler(BaseHTTPRequestHandler):
             return
         limit = int(payload.get("limit", DEFAULT_ROW_LIMIT))
         lang = _detect_language(query)
+        extra = {}
         try:
-            df = self.server.graph.execute(query)
-            if df is None:  # mutation statements return no rows
+            out = self.server.graph.execute(query)
+            if isinstance(out, DataFrame):
+                cols, rows = _df_payload(out, limit)
+            elif isinstance(out, dict):  # mutation / parse-only summary
+                cols, rows, extra = [], [], {"summary": out}
+            elif out is None:  # no rows (e.g. a missing KV key)
                 cols, rows = [], []
-            else:
-                cols, rows = _df_payload(df, limit)
+            else:  # KV GET value
+                cols, rows = ["value"], [[out]]
         except Exception as exc:  # noqa: BLE001 — surface as HTTP 400
             self._json(400, {
                 "status": "error",
@@ -117,6 +132,7 @@ class _Handler(BaseHTTPRequestHandler):
             "query_type": lang,
             "columns": cols,
             "results": rows,
+            **extra,
         })
 
 

@@ -10,9 +10,23 @@ DataFrames. Mutations (operators/mutations.py) produce new DataFrames;
 the session swaps them in and re-registers temp views — read-your-writes
 without mutable storage. Persistence = `save()` to parquet
 (at production scale: Delta, where MERGE/OPTIMIZE apply).
+
+Concurrency: writers serialize on one session lock held across their
+whole read-modify-``set_state``; readers take no lock — they plan over
+whichever immutable snapshot is current. Every swap ENDS by replacing
+the read memos (plan cache, frontiers, statistics) with empty ones, and
+a reader takes its memo before it reads any frame, so anything derived
+from a pre-swap frame lands in a memo that the swap discards: no read
+planned before or during a swap is served after it. A read that
+overlaps a swap may itself see a mix of the two states; it is not
+cached.
 """
 
 from __future__ import annotations
+
+import functools
+import re
+import threading
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -48,7 +62,7 @@ def build_spark(app_name: str = "graphdb_spark", master: str | None = None,
     # GC-thrashes (GCLocker retry crashes) on >SF0.1 shuffles; only
     # effective before the JVM launches, so set it here, not per-query
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-    return (
+    spark = (
         b.config("spark.driver.memory", driver_mem)
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -73,6 +87,102 @@ def build_spark(app_name: str = "graphdb_spark", master: str | None = None,
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+    # one-pass bounded collect: `LIMIT n` first probes this many
+    # partitions (Spark's default is 1, then 4x more per extra job).
+    # At the core count, a bounded read over the core-sized resident
+    # graph (workloads.graph.graph_session) is one job, in one wave
+    spark.conf.set("spark.sql.limit.initialNumPartitions",
+                   str(spark.sparkContext.defaultParallelism))
+    return spark
+
+
+#: statements that write (or may write): never plan-cached. A false
+#: positive (the keyword inside a string literal) merely skips the cache
+_CYPHER_WRITES = re.compile(r"\b(CREATE|MERGE|DELETE|REMOVE|SET)\b")
+#: SQL statement heads that execute as reads (lazily, per collect)
+_SQL_READS = ("SELECT", "WITH", "VALUES", "TABLE")
+#: the session's temp views: ``set_state`` re-registers them and drops
+#: every plan cached over them
+_GRAPH_VIEWS = ("vertices", "edges")
+#: leaves a cacheable SQL read may reach outside the graph views:
+#: inline rows only (``SELECT 1``, ``VALUES``, a CTE reference)
+_INLINE_LEAVES = ("OneRowRelation", "LocalRelation", "CTERelationRef")
+
+
+def _reads_clock(df: DataFrame) -> bool:
+    """Whether ``df`` calls a clock function (``current_timestamp()``,
+    ``now()``, ``current_date()`` …): Spark fixes its value when it
+    optimizes the plan, so a reused plan would keep answering the
+    time of its first run."""
+    pattern = df.sparkSession._jvm.org.apache.spark.sql.catalyst.trees \
+        .TreePattern.CURRENT_LIKE()
+    return df._jdf.queryExecution().analyzed().containsPattern(pattern)
+
+
+def _replays_over_graph(df: DataFrame) -> bool:
+    """Whether collecting a SQL read's plan again answers what planning
+    it afresh would: the analyzed plan is deterministic (no ``uuid()``,
+    ``rand()`` …), reads no clock, and scans nothing but the graph
+    views. Any other table, file path or view keeps the file listing or
+    frame pinned when it was planned, and nothing drops the cache when
+    it changes."""
+    plan = df._jdf.queryExecution().analyzed()
+    if not plan.deterministic() or _reads_clock(df):
+        return False
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "View":
+            ident = node.desc().identifier()
+            if not (node.isTempView() and ident.database().isEmpty()
+                    and ident.table() in _GRAPH_VIEWS):
+                return False
+            continue  # the view's plan is the session's own frame
+        children, subqueries = node.children(), node.subqueries()
+        if children.isEmpty() and kind not in _INLINE_LEAVES:
+            return False
+        todo += [children.apply(i) for i in range(children.size())]
+        todo += [subqueries.apply(i) for i in range(subqueries.size())]
+    return True
+
+
+def serialized(mutation):
+    """Run ``mutation(g, ...)`` under ``g``'s write lock, so its read
+    of the current state and its ``set_state`` are one step: two
+    concurrent writers can no longer both derive from the same old
+    state and lose one write."""
+
+    @functools.wraps(mutation)
+    def run(g, *args, **kwargs):
+        with g._write_lock:
+            return mutation(g, *args, **kwargs)
+
+    return run
+
+
+def bounded(df: DataFrame, n: int) -> DataFrame:
+    """``df.limit(n)``, prepared once per frame for its latest limit.
+
+    A fresh ``limit`` wrapper is a new query: Spark re-plans it and
+    re-runs every shuffle and broadcast stage below it. Collecting the
+    SAME limited frame again reuses its physical plan (AQE's final plan
+    included) and the stages already materialized, so a repeated read
+    of a plan-cached frame is a single result job. The prepared frame
+    lives on the frame, so it is dropped with the frame's plan-cache
+    entry.
+
+    Retention: an executed prepared frame pins its broadcast relations
+    on the driver heap and its shuffle files on local disk. One limit
+    is kept per frame, so at most ``CYPHER_PLAN_CACHE_MAX`` (128)
+    executed plans are pinned per session; each broadcast side is
+    capped by ``spark.sql.autoBroadcastJoinThreshold`` (64 MB, see
+    :func:`build_spark`) or, for hinted broadcasts, by the Cypher
+    executor's ``BROADCAST_NODE_MAX`` (250k rows)."""
+    prepared = df.__dict__.get("_graphdb_bounded")
+    if prepared is None or prepared[0] != n:
+        prepared = df.__dict__["_graphdb_bounded"] = (n, df.limit(n))
+    return prepared[1]
 
 
 from graphdb_spark.partitioning import append_pressure as _append_pressure
@@ -131,6 +241,17 @@ class GraphSession:
         self._layout_buckets = 0
         self._layout_cached = False
         self._layout_shared = False
+        # writers hold _write_lock across read-modify-set_state (it is
+        # re-entrant: a Cypher DML statement may swap state twice);
+        # _cache_lock guards the read plan cache's LRU bookkeeping —
+        # readers never wait on a writer
+        self._write_lock = threading.RLock()
+        self._cache_lock = threading.Lock()
+        self._cypher_plan_cache: dict = {}
+        self._frontier_cache: dict = {}
+        # per-state statistics: "labels" (executor label counts) and
+        # ("branch", direction) (max_branch)
+        self._stats: dict = {}
         self._register_views()
 
     # ------------------------------------------------------------ state
@@ -151,6 +272,7 @@ class GraphSession:
         self._v.createOrReplaceTempView("vertices")
         self._e.createOrReplaceTempView("edges")
 
+    @serialized
     def set_state(self, vertices: DataFrame | None = None,
                   edges: DataFrame | None = None,
                   kv: DataFrame | None = None):
@@ -188,14 +310,6 @@ class GraphSession:
             self._kv = _cp(kv)
         if vertices is not None or edges is not None:
             self._state_version += 1
-            # graph state changed in place: drop memos derived from the
-            # old state (the translator's materialized frontiers would
-            # be STALE DATA, the executor's label counts a stale
-            # broadcast decision)
-            self._frontier_cache = {}
-            self._label_count_cache = None
-            self._branch_cache = {}
-            self._cypher_plan_cache = {}
             # a graph mutation invalidates any adopted bucketed layout:
             # the written tables describe the PREVIOUS state. The
             # canonical _v/_e frames (just swapped) stay correct; hops
@@ -212,8 +326,13 @@ class GraphSession:
             self._e_by_key = {}
             self._layout_name = None
             self._register_views()
+            # last, once every frame and view is the new one: a read
+            # planned anywhere before this point is discarded with the
+            # old memos
+            self._drop_read_memos()
         return self
 
+    @serialized
     def use_bucketed_layout(self, name: str = "graph_adj",
                             buckets: int = 32, write: bool = True,
                             cache: bool = False,
@@ -258,13 +377,24 @@ class GraphSession:
         # absorb this session's mutations (see append_state). A flag,
         # not a post-hoc attribute: re-adoption re-states ownership.
         self._layout_shared = shared
-        # frames changed identity: derived memos are stale
-        self._frontier_cache = {}
-        self._label_count_cache = None
-        self._branch_cache = {}
-        self._cypher_plan_cache = {}
         self._register_views()
+        # frames changed identity: derived memos are stale (dropped
+        # last, as in set_state)
+        self._drop_read_memos()
         return self
+
+    def _drop_read_memos(self):
+        """End a swap: replace everything derived from the previous
+        frames — every cached read plan, the translator's materialized
+        frontiers (stale data), the label counts (a stale broadcast
+        decision) and branch bounds — with empty memos. Must run after
+        the new frames and views are in place. Readers take a memo
+        before they read a frame and store into the one they took, so
+        a reader racing this swap stores into a discarded memo."""
+        with self._cache_lock:
+            self._cypher_plan_cache = {}
+            self._frontier_cache = {}
+            self._stats = {}
 
     def ensure_bucketed_layout(self, name: str = "graph_adj",
                                buckets: int = 32,
@@ -494,6 +624,7 @@ class GraphSession:
     #: runs continuously.
     LAYOUT_COMPACT_APPENDS = 16
 
+    @serialized
     def append_state(self, vertices: DataFrame | None = None,
                      edges: DataFrame | None = None) -> "GraphSession":
         """Row-ADD mutation (create_vertex / bulk_insert): when a
@@ -693,14 +824,14 @@ class GraphSession:
 
     def _translator(self) -> Translator:
         # frontier memo persists across queries on this immutable state
-        # (set_state returns a NEW session, so mutations invalidate it)
-        if not hasattr(self, "_frontier_cache"):
-            self._frontier_cache = {}
+        # (set_state drops it with the other read memos); taken BEFORE
+        # the frames (see _drop_read_memos)
+        frontier_cache = self._frontier_cache
         return Translator(
             self._v, self._e,
             strict_indexing=self.strict_indexing, indexed=self._indexed,
             hot_endpoints=getattr(self, "_hot_endpoints", None),
-            frontier_cache=self._frontier_cache,
+            frontier_cache=frontier_cache,
             edges_by_key=getattr(self, "_e_by_key", None),
         )
 
@@ -724,11 +855,21 @@ class GraphSession:
         return self
 
     def sql(self, query: str) -> DataFrame:
-        """SQL passthrough over the registered views (SURVEY.md §7 M5)."""
-        return self.spark.sql(query)
+        """SQL passthrough over the registered views (SURVEY.md §7 M5).
+        Reads over the graph views alone share the Cypher reads' plan
+        cache (see :meth:`cypher` and :func:`_replays_over_graph`);
+        any other read, and every command (DDL/DML, SHOW, SET …, which
+        run eagerly inside ``spark.sql``), is planned afresh per call."""
+        q = query.strip()
+        head = q.split(None, 1)[0].upper() if q else ""
+        if head not in _SQL_READS:
+            return self.spark.sql(q)
+        return self._cached_read(("sql", q), lambda: self.spark.sql(q),
+                                 replayable=_replays_over_graph)
 
-    #: plan-cache capacity; read paths repeat heavily (dashboards,
-    #: bench best-of-N), DML never caches, so a small LRU suffices
+    #: read plan-cache capacity (Cypher and SQL reads share it); read
+    #: paths repeat heavily (dashboards, bench best-of-N), DML never
+    #: caches, so a small LRU suffices
     CYPHER_PLAN_CACHE_MAX = 128
 
     def cypher(self, query: str):
@@ -737,42 +878,49 @@ class GraphSession:
         Read statements (those that produce a DataFrame) are PLAN-
         CACHED per query text on this immutable state — the standard
         engine plan cache: a repeated MATCH…RETURN skips tokenize/
-        parse/bind entirely and goes straight to execution. Mutations
-        and KV ops are never cached (they have side effects and return
-        summaries), and set_state drops the cache wholesale, so a
-        cached plan can never read stale state (its lazy DataFrame
-        references the exact vertices/edges snapshots it was planned
-        against)."""
-        import re
-
+        parse/bind entirely and goes straight to execution, and
+        :func:`bounded` keeps its row-limited frame with it, so the
+        physical plan and materialized stages are reused too.
+        Mutations and KV ops are never cached (they have side effects
+        and return summaries); writes run under the session's write
+        lock, and set_state drops the cache wholesale, so a cached plan
+        can never read stale state (its lazy DataFrame references the
+        exact vertices/edges snapshots it was planned against)."""
         from graphdb_spark.cypher.executor import execute_cypher
 
-        if not hasattr(self, "_cypher_plan_cache"):
-            self._cypher_plan_cache = {}
         # a DataFrame result is NOT sufficient for cacheability:
-        # `MERGE … RETURN n.x` returns a DataFrame AND mutates. Only
-        # statements free of DML keywords cache; a false positive
-        # (keyword inside a string literal) merely skips the cache —
-        # never a stale read
-        cacheable = not re.search(
-            r"\b(CREATE|MERGE|DELETE|REMOVE|SET)\b", query.upper()
-        )
-        if cacheable:
-            hit = self._cypher_plan_cache.pop(query, None)
+        # `MERGE … RETURN n.x` returns a DataFrame AND mutates
+        if _CYPHER_WRITES.search(query.upper()):
+            with self._write_lock:
+                return execute_cypher(self, query)
+        # Cypher reads scan the session's own frames; only its clock
+        # functions (timestamp(), date()) would freeze in a reused plan
+        return self._cached_read(query, lambda: execute_cypher(self, query),
+                                 replayable=lambda df: not _reads_clock(df))
+
+    def _cached_read(self, key, plan, replayable):
+        """LRU lookup of a read plan; on a miss, ``plan()`` and cache
+        the result when it is a DataFrame that ``replayable`` accepts —
+        into the cache taken BEFORE planning, so a read planned before
+        or during a swap lands in the memo the swap discards."""
+        with self._cache_lock:
+            cache = self._cypher_plan_cache
+            hit = cache.pop(key, None)
             if hit is not None:
                 # true LRU: re-insert on hit so dict order = recency
                 # and eviction below drops the least-recently-USED
                 # entry, not the least-recently-inserted
-                self._cypher_plan_cache[query] = hit
+                cache[key] = hit
                 return hit
-        out = execute_cypher(self, query)
-        if cacheable and isinstance(out, DataFrame):
-            if len(self._cypher_plan_cache) >= self.CYPHER_PLAN_CACHE_MAX:
-                # drop the oldest entry (dict preserves insert order)
-                self._cypher_plan_cache.pop(
-                    next(iter(self._cypher_plan_cache))
-                )
-            self._cypher_plan_cache[query] = out
+        out = plan()
+        if isinstance(out, DataFrame) and replayable(out):
+            with self._cache_lock:
+                if key in cache:  # a concurrent miss planned it first
+                    return cache[key]
+                if len(cache) >= self.CYPHER_PLAN_CACHE_MAX:
+                    # drop the oldest entry (dict keeps insert order)
+                    cache.pop(next(iter(cache)))
+                cache[key] = out
         return out
 
     def execute(self, query: str):
@@ -788,7 +936,7 @@ class GraphSession:
         if is_cypher(q):
             return self.cypher(q)
         head = q.split(None, 1)[0].upper() if q else ""
-        if head in ("SELECT", "WITH", "VALUES", "TABLE", "SHOW", "DESCRIBE"):
+        if head in _SQL_READS + ("SHOW", "DESCRIBE"):
             return self.sql(q)
         if head in ("QUERY", "MUTATION", "SUBSCRIPTION") or q.startswith("{"):
             # GraphQL front-end: detected like the reference
@@ -811,9 +959,8 @@ class GraphSession:
         cache) and invalidated by set_state."""
         from pyspark.sql import functions as F  # noqa: PLC0415
 
-        if not hasattr(self, "_branch_cache"):
-            self._branch_cache = {}
-        hit = self._branch_cache.get(direction)
+        stats = self._stats  # taken before the frame (_drop_read_memos)
+        hit = stats.get(("branch", direction))
         if hit is not None:
             return hit
         e = self._e
@@ -827,7 +974,7 @@ class GraphSession:
             )
         row = keyed.groupBy("k").count().agg(F.max("count")).collect()
         n = int(row[0][0] or 0)
-        self._branch_cache[direction] = n
+        stats[("branch", direction)] = n
         return n
 
     def bfs(self, start_id: str, max_depth: int = 5, t: str | None = None,
@@ -922,6 +1069,7 @@ class GraphSession:
 
     # ------------------------------------------------------------ KV store
 
+    @serialized
     def kv_insert(self, key: str, value: str):
         """storage_engine.rs:1233-1239 insert; last-writer-wins."""
         new = local_df(self.spark, [(key, value)], "key string, value string")
@@ -932,6 +1080,7 @@ class GraphSession:
         rows = self._kv.filter(F.col("key") == key).select("value").collect()
         return rows[0][0] if rows else None
 
+    @serialized
     def kv_delete(self, key: str):
         return self.set_state(kv=self._kv.filter(F.col("key") != key))
 

@@ -28,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from graphdb_spark.session import serialized
+
 CHANGE_SCHEMA = (
     "timestamp timestamp, kind string, op string, id string, label string, "
     "src string, relationship string, dst string, "
@@ -35,6 +37,7 @@ CHANGE_SCHEMA = (
 )
 
 
+@serialized
 def fold_changes(g, batch: DataFrame) -> None:
     """Fold one (batch) DataFrame of changes into the session state.
 
@@ -106,6 +109,7 @@ def fold_changes(g, batch: DataFrame) -> None:
     g.set_state(new_v, new_e)
 
 
+@serialized
 def fold_appends(g, batch: DataFrame, validate: bool = True) -> None:
     """Insert-only fold — the APPEND path of the streaming ingest
     story, for the dominant 100 TB stream shape (event edges arrive,

@@ -89,6 +89,14 @@ def _gc_stale_adjacency(spark, sf_dir: str, buckets: int, keep: str):
             P.drop_adjacency(spark, name)
 
 
+def _resident(spark, v, e) -> GraphSession:
+    """Plain resident session: both frames cached in (at most) one
+    partition per core."""
+    n = spark.sparkContext.defaultParallelism
+    return GraphSession(spark, v.coalesce(n).cache(), e.coalesce(n).cache(),
+                        assume_integrity=True)
+
+
 def graph_session(spark, sf_dir) -> GraphSession:
     """Memoized per sf_dir; vertices/edges resident for repeated
     queries (the reference keeps the graph resident in its daemons —
@@ -103,11 +111,15 @@ def graph_session(spark, sf_dir) -> GraphSession:
     broadcast the frontier; the layout buys nothing). Disable with
     SPARK_GRAFT_AUTO_LAYOUT=0.
 
-    The cache keeps its natural ~parallelism partitioning: compute-
-    bound scans (multi-hop joins, distincts) want the full core count;
-    measured at sf0.1, shrinking the cache to byte-sized partitions
-    made every compute query 3-4× slower for a ~0.1 s/task saving on
-    the tiny ones."""
+    The plain cache is core-sized (:func:`_resident`): each frame is
+    coalesced to ``defaultParallelism`` partitions before caching, so
+    a full scan is one task wave at any core count. Left alone, the
+    edge cache kept its lineage's partitioning — 1 PLACED partition
+    plus ``spark.sql.shuffle.partitions`` CONTAINS partitions (cached
+    plans are exempt from AQE coalescing) — a 33-task scan, 9 waves on
+    4 cores, whatever the data size. Fewer partitions than cores would
+    go the other way: measured at sf0.1, byte-sized partitioning made
+    every compute query 3-4× slower."""
     key = (id(spark.sparkContext), sf_dir)
     if key not in _GRAPH_CACHE:
         v, e = tpch_graph(spark, sf_dir)
@@ -162,11 +174,9 @@ def graph_session(spark, sf_dir) -> GraphSession:
                     " falling back to plain cached frames",
                     file=sys.stderr,
                 )
-                g = GraphSession(spark, v.cache(), e.cache(),
-                                 assume_integrity=True)
+                g = _resident(spark, v, e)
         else:
-            g = GraphSession(spark, v.cache(), e.cache(),
-                             assume_integrity=True)
+            g = _resident(spark, v, e)
         _GRAPH_CACHE[key] = g
     return _GRAPH_CACHE[key]
 

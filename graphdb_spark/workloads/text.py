@@ -861,7 +861,7 @@ def _tfidf_sql() -> str:
     return f"""
 WITH sh AS (
   SELECT doc_id, unnest({sh_all}) AS s
-  FROM (SELECT doc_id, {toks} AS t FROM documents)
+  FROM (SELECT doc_id, {toks} AS t FROM documents WHERE doc_id IS NOT NULL)
 ), tf AS (
   SELECT doc_id, s, CAST(COUNT(*) AS BIGINT) AS tf
   FROM sh GROUP BY doc_id, s

@@ -35,17 +35,31 @@ for i in range(PAIRS):
                 [sys.executable, "bench.py"], cwd=cwd, env=ENV,
                 stdout=fh, stderr=subprocess.DEVNULL,
             ).returncode
-        payload = json.loads(open(out).read().strip().splitlines()[-1])
+        if rc != 0:
+            # a failed arm leaves an empty or partial payload: skip it
+            print(f"pair {i} {arm}: bench.py failed rc={rc}, skipped",
+                  flush=True)
+            continue
+        with open(out) as fh:
+            payload = json.loads(fh.read().strip().splitlines()[-1])
         results[arm].append(payload)
         print(f"pair {i} {arm}: total={payload['value']}s rc={rc}", flush=True)
+
+if not results["head"] or not results["r9"]:
+    sys.exit("no successful run in one arm: nothing to compare")
 
 # per-query min-of-pairs comparison (min = least host noise per arm)
 names = list(results["head"][0]["queries"].keys())
 print(f"\n{'query':<32} {'r9_min':>8} {'head_min':>8} {'head/r9':>8}")
 tot_h = tot_r = 0.0
 for q in names:
-    h = min(r["queries"][q] for r in results["head"] if r["queries"][q] is not None)
-    r9 = min(r["queries"][q] for r in results["r9"] if r["queries"][q] is not None)
+    h = min((r["queries"].get(q) for r in results["head"]
+             if r["queries"].get(q) is not None), default=None)
+    r9 = min((r["queries"].get(q) for r in results["r9"]
+              if r["queries"].get(q) is not None), default=None)
+    if h is None or r9 is None:
+        print(f"{q:<32} {'-':>8} {'-':>8}  (failed in every run of an arm)")
+        continue
     tot_h += h
     tot_r += r9
     print(f"{q:<32} {r9:>8.3f} {h:>8.3f} {h / r9 if r9 else 0:>8.2f}")

@@ -1,4 +1,4 @@
-"""Round-10 optimization harness: isolate each headline query with the
+"""Round-11 optimization harness: isolate each headline query with the
 noop sink (guide §1.4), time best-of-N inside ONE session, and dump
 `.explain("formatted")` to plans/r11/<query>_<tag>.txt.
 
@@ -7,10 +7,11 @@ Usage:
                                   [--sf-dir DIR] [--plans-only] [query ...]
 
 Defaults: tag=before, runs=5, sf0.1, all headliners from bench.py.
-Timing methodology mirrors bench.py (warm-up first, best of N) but the
-timed action is the noop sink so the computation, not the sink or the
-count-prune, is what's measured; bench.py itself keeps df.count() so
-round-over-round numbers stay comparable.
+Timing is best of N with no untimed warm-up call: the first timed run
+is cold (masked by best-of-N, but a --runs 1 number is a cold one).
+The timed action is the noop sink so the computation, not the sink or
+the count-prune, is what's measured; bench.py itself keeps df.count()
+so round-over-round numbers stay comparable.
 """
 
 from __future__ import annotations

@@ -45,6 +45,33 @@ def test_pagerank_dangling_mass(spark):
     assert abs(sum(ranks.values()) - 3.0) < 1e-6
 
 
+def test_pagerank_plan_grows_linearly_with_iterations(diamond, monkeypatch):
+    """Every materialized plan pagerank builds, summed, must grow by a
+    constant per iteration. Reading the un-materialized ranks twice
+    (total + divide) used to double the plan each iteration."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    exchanges = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def counting(self, *args, **kwargs):
+        plan = self._jdf.queryExecution().executedPlan().toString()
+        exchanges.append(plan.count("Exchange"))
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", counting)
+    totals = []
+    for iterations in range(1, 5):
+        exchanges.clear()
+        final = AN.pagerank(diamond, iterations=iterations)
+        exchanges.append(
+            final._jdf.queryExecution().executedPlan().toString()
+            .count("Exchange"))
+        totals.append(sum(exchanges))
+    steps = {b - a for a, b in zip(totals, totals[1:])}
+    assert len(steps) == 1, totals
+
+
 def test_triangle_count(spark):
     """K3 plus a pendant edge: triangle corners get 1, pendant 0."""
     rows = [("a", "E", "b"), ("b", "E", "c"), ("c", "E", "a"), ("c", "E", "d")]

@@ -1,0 +1,244 @@
+"""Serving path: prepared (row-limited, plan-cached) reads, the
+core-sized resident graph cache, the one-pass bounded collect, and
+serialized writes under concurrent callers."""
+
+from __future__ import annotations
+
+import threading
+import uuid
+
+import pytest
+
+from graphdb_spark.rest import _df_payload
+from graphdb_spark.session import GraphSession, bounded
+
+ONE_HOP = "MATCH (c:customer {id: 'c_1'})-[:PLACED]->(o) RETURN count(o) AS n"
+LOOKUP = "MATCH (c:customer {id: 'c_7'}) RETURN c.id, c.mktsegment"
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs it ran), counted by job group."""
+    sc = spark.sparkContext
+    group = f"t{uuid.uuid4().hex[:12]}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def resident(spark, sf_dir):
+    from graphdb_spark.workloads.graph import graph_session
+
+    return graph_session(spark, sf_dir)
+
+
+def _small(spark):
+    from graphdb_spark.datamodel import local_df
+
+    return GraphSession(
+        spark,
+        local_df(spark, [("a", "N", {})],
+                 "id string, label string, properties map<string,string>"),
+        local_df(spark, [],
+                 "src string, relationship string, dst string, "
+                 "properties map<string,string>"),
+    )
+
+
+def test_repeated_cached_one_hop_read_is_one_job(spark, resident):
+    first = _df_payload(resident.execute(ONE_HOP), 1000)
+    df = resident.execute(ONE_HOP)
+    again, jobs = _jobs(spark, lambda: _df_payload(df, 1000))
+    assert again == first and first[1][0][0] > 0
+    assert jobs <= 1
+
+
+def test_bounded_frame_is_prepared_once_per_limit(resident):
+    df = resident.execute(LOOKUP)
+    assert bounded(df, 10) is bounded(df, 10)
+    ten = bounded(df, 10)
+    assert bounded(df, 11) is not ten
+    # one prepared limit per frame: the older one is let go
+    assert bounded(df, 10) is not ten
+
+
+def test_bounded_lookup_on_resident_vertices_is_one_job(spark, resident):
+    # a fresh limit over the resident vertex cache: the first probe
+    # covers every partition, so no incremental follow-up jobs
+    df = resident.cypher(LOOKUP)
+    rows, jobs = _jobs(spark, lambda: df.limit(1000).collect())
+    assert jobs == 1
+    assert rows == df.collect() and len(rows) == 1
+
+
+def test_plain_graph_cache_is_core_sized(spark, resident):
+    n = spark.sparkContext.defaultParallelism
+    assert resident.edges.rdd.getNumPartitions() == n
+    assert resident.vertices.rdd.getNumPartitions() <= n
+
+
+def test_sql_reads_hit_cache_and_set_state_invalidates(spark):
+    from graphdb_spark.operators import mutations as M
+
+    g = _small(spark)
+    q = "SELECT id FROM vertices ORDER BY id"
+    d1 = g.sql(q)
+    assert g.sql(q) is d1
+    assert g.execute(q) is d1
+    assert [r.id for r in d1.collect()] == ["a"]
+    M.create_vertex(g, "b", "N")
+    d2 = g.execute(q)
+    assert d2 is not d1
+    assert [r.id for r in d2.collect()] == ["a", "b"]
+    # commands run eagerly and are never cached
+    assert g.sql("SHOW TABLES") is not g.sql("SHOW TABLES")
+    # inline rows, CTEs and subqueries over the graph views replay
+    for q in ("SELECT 1 AS one", "VALUES (1), (2)",
+              "WITH x AS (SELECT id FROM vertices) SELECT * FROM x",
+              "SELECT id FROM vertices WHERE id IN "
+              "(SELECT src FROM edges)"):
+        assert g.sql(q) is g.sql(q), q
+
+
+def test_sql_reads_beyond_the_graph_views_are_not_cached(spark, tmp_path):
+    g = _small(spark)
+    for q in ("SELECT current_timestamp() AS t", "SELECT now() AS t",
+              "SELECT id, uuid() AS u FROM vertices",
+              "SELECT id FROM vertices WHERE rand() < 2"):
+        assert g.sql(q) is not g.sql(q), q
+    # another view: a replaced view is read afresh
+    spark.range(2).createOrReplaceTempView("documents")
+    q = "SELECT count(*) AS n FROM documents"
+    assert g.sql(q).collect()[0].n == 2
+    spark.range(5).createOrReplaceTempView("documents")
+    assert g.sql(q).collect()[0].n == 5
+    # a file path: rewritten files are listed afresh
+    path = str(tmp_path / "t")
+    spark.range(3).write.parquet(path)
+    q = f"SELECT count(*) AS n FROM parquet.`{path}`"
+    assert g.sql(q).collect()[0].n == 3
+    spark.range(7).write.mode("overwrite").parquet(path)
+    assert g.sql(q).collect()[0].n == 7
+    # a subquery over another relation disqualifies the whole read
+    q = "SELECT id FROM vertices WHERE id IN (SELECT 'a' FROM documents)"
+    assert g.sql(q) is not g.sql(q)
+
+
+def test_cypher_clock_reads_are_not_cached(spark):
+    g = _small(spark)
+    q = "MATCH (n:N) RETURN n.id AS id, timestamp() AS t"
+    assert g.cypher(q) is not g.cypher(q)
+    q = "MATCH (n:N) RETURN n.id AS id"
+    assert g.cypher(q) is g.cypher(q)
+
+
+def test_read_planned_across_a_swap_is_not_cached(spark):
+    g = _small(spark)
+    q = "MATCH (n:N) RETURN n.id AS id"
+
+    def plan_then_swap():
+        from graphdb_spark.cypher.executor import execute_cypher
+
+        out = execute_cypher(g, q)
+        g.set_state(vertices=g.vertices)  # a writer swaps mid-plan
+        return out
+
+    stale = g._cached_read(q, plan_then_swap, lambda df: True)
+    assert q not in g._cypher_plan_cache
+    assert g.cypher(q) is not stale
+    assert q in g._cypher_plan_cache
+
+
+def test_read_planned_during_a_swap_is_not_cached(spark, monkeypatch):
+    # a read that runs after set_state has swapped the frames but
+    # before it re-registers the views plans against the OLD views
+    from graphdb_spark.operators import mutations as M
+
+    g = _small(spark)
+    q = "SELECT id FROM vertices ORDER BY id"
+    register, during = g._register_views, []
+
+    def read_then_register():
+        during.append(g.sql(q))
+        register()
+
+    monkeypatch.setattr(g, "_register_views", read_then_register)
+    M.create_vertex(g, "b", "N")
+    monkeypatch.undo()
+    assert [r.id for r in during[0].collect()] == ["a"]
+    assert [r.id for r in g.sql(q).collect()] == ["a", "b"]
+
+
+def test_statistics_computed_across_a_swap_are_dropped(spark, monkeypatch):
+    # a reader computes a statistic on the old frames, a writer swaps
+    # state before the reader stores it: the store must not survive
+    from graphdb_spark.cypher.executor import _Executor
+    from graphdb_spark.operators import mutations as M
+
+    g = _small(spark)
+    DataFrame = type(g.vertices)  # the concrete (classic) frame class
+    collect = DataFrame.collect
+
+    def racing(write):
+        def collect_then_write(df):
+            monkeypatch.setattr(DataFrame, "collect", collect)
+            rows = collect(df)
+            write()
+            return rows
+
+        monkeypatch.setattr(DataFrame, "collect", collect_then_write)
+
+    racing(lambda: M.create_edge(g, "a", "R", "a"))
+    assert g.max_branch("out") == 0  # the racing reader's own answer
+    assert g.max_branch("out") == 1
+
+    racing(lambda: M.create_vertex(g, "b", "N"))
+    assert _Executor(g)._label_counts() == {"N": 1}
+    assert _Executor(g)._label_counts() == {"N": 2}
+
+
+def test_concurrent_reads_of_one_cached_entry_agree(spark, resident):
+    q = ("MATCH (c:customer)-[:PLACED]->(o) WHERE c.mktsegment = 'BUILDING' "
+         "RETURN c.id AS c, count(o) AS n ORDER BY c")
+    df = resident.execute(q)  # cached, but never collected yet
+    got, errors = [None] * 4, []
+
+    def read(i):
+        try:
+            got[i] = _df_payload(resident.execute(q), 50)
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=read, args=(i,)) for i in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors
+    want = (df.columns, [list(r) for r in df.limit(50).collect()])
+    assert got == [want] * 4 and len(want[1]) > 0
+
+
+def test_concurrent_creates_are_not_lost(spark):
+    g = _small(spark)
+    errors = []
+
+    def create(i):
+        try:
+            g.execute(f"CREATE (:W {{id: 'w{i}'}})")
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=create, args=(i,)) for i in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors
+    rows = g.execute("MATCH (n:W) RETURN n.id AS id ORDER BY id").collect()
+    assert [r.id for r in rows] == ["w0", "w1", "w2", "w3"]

@@ -91,3 +91,39 @@ def test_missing_query_field_is_400(server):
 def test_unknown_route_404(server):
     code, _ = _get(server.url + "/api/v1/nope")
     assert code == 404
+
+
+def test_mutation_answers_200_with_summary(spark):
+    """DML returns a summary dict, not rows: applied writes are a
+    success (200), and the write is visible to the next read."""
+    from graphdb_spark.datamodel import local_df
+    from graphdb_spark.session import GraphSession
+
+    g = GraphSession(
+        spark,
+        local_df(spark, [("a", "N", {})],
+                 "id string, label string, properties map<string,string>"),
+        local_df(spark, [],
+                 "src string, relationship string, dst string, "
+                 "properties map<string,string>"),
+    )
+    srv = QueryServer(g).start()
+    try:
+        url = srv.url + "/api/v1/query"
+        code, body = _post(url, {"query": "CREATE (:N {id: 'z'})"})
+        assert (code, body["status"]) == (200, "success")
+        assert body["summary"]["created_vertices"] == 1
+        assert body["results"] == []
+        code, body = _post(url, {"query": "MATCH (n:N {id: 'z'}) RETURN n.id"})
+        assert (code, body["results"]) == (200, [["z"]])
+        code, body = _post(url, {"query": "query { person { name } }"})
+        assert (code, body["query_type"]) == (200, "GraphQL")
+        assert body["summary"]["status"] == "parse_only"
+        # KV forms: SET answers a summary, GET one value column
+        code, body = _post(url, {"query": "SET greeting = 'hi'"})
+        assert (code, body["summary"]["key"]) == (200, "greeting")
+        code, body = _post(url, {"query": "MATCH (greeting) RETURN"})
+        assert (code, body["columns"], body["results"]) == (
+            200, ["value"], [["hi"]])
+    finally:
+        srv.stop()
