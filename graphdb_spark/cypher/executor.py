@@ -24,6 +24,7 @@ stringified; numeric comparisons cast through try_cast(double) so
 
 from __future__ import annotations
 
+import dataclasses
 import itertools
 import uuid
 
@@ -86,6 +87,48 @@ def _expr_vars(e) -> set[str]:
     return set()
 
 
+def _id_only_vars(stmt) -> set[str]:
+    """Named node variables that ``stmt`` uses by id alone: bound by
+    exactly one label- and property-free node pattern, and otherwise
+    named only as the whole argument of ``count(v)`` /
+    ``count(DISTINCT v)``. Any other mention — ``v.prop``, ``RETURN v``,
+    ``WITH v``, a second pattern, an alias, even a label or key spelled
+    like it — keeps the variable out (a false mention only costs the
+    vertex join the planner would have made anyway). So does a path
+    variable over its pattern: ``nodes(p)`` reads every node's label
+    and properties."""
+    mentions: dict[str, int] = {}
+    bare: list[str] = []
+    on_path: set[str] = set()
+
+    def walk(x):
+        if isinstance(x, str):
+            mentions[x] = mentions.get(x, 0) + 1
+        elif isinstance(x, P.Lit):
+            return  # a literal never names a variable
+        elif (isinstance(x, P.Func) and x.name == "count"
+              and len(x.args) == 1 and isinstance(x.args[0], P.Var)):
+            return  # count(v): the id column is all it reads
+        elif isinstance(x, (list, tuple)):
+            for item in x:
+                walk(item)
+        elif isinstance(x, dict):
+            for k, val in x.items():
+                walk(k)
+                walk(val)
+        elif dataclasses.is_dataclass(x):
+            if (isinstance(x, P.NodePattern) and x.var and not x.labels
+                    and not x.properties):
+                bare.append(x.var)
+            if isinstance(x, P.PathPattern) and x.path_var:
+                on_path.update(n.var for n in x.nodes if n.var)
+            for f in dataclasses.fields(x):
+                walk(getattr(x, f.name))
+
+    walk(stmt)
+    return {v for v in bare if mentions[v] == 1} - on_path
+
+
 class CypherExecutionError(ValueError):
     pass
 
@@ -136,6 +179,9 @@ class _Executor:
         self.path_vars: dict[str, object] = {}
         self._lambda_scope: dict[str, object] = {}
         self._anon = itertools.count()
+        #: named endpoints a statement reads by id only (bind_node
+        #: may skip their vertex join); set per statement by run()
+        self.id_only: set[str] = set()
         self.summary = {"created_vertices": 0, "created_edges": 0,
                         "deleted_vertices": 0, "deleted_edges": 0,
                         "properties_set": 0}
@@ -296,7 +342,7 @@ class _Executor:
                 return df.drop(*self._vcols(tmp)), var
             seen[var] = var
             if (
-                np.var is None
+                (np.var is None or np.var in self.id_only)
                 and np.label is None
                 and not np.properties
                 and df is not None
@@ -313,7 +359,15 @@ class _Executor:
                 # edges x vertices shuffle per anonymous node
                 # (measured: 2.1 s -> 1.2 s on the sf1 grouped count).
                 # bulk_insert (dangling edges possible) clears the flag
-                # and this branch never fires.
+                # and this branch never fires. A named endpoint read
+                # only by count(v) (_id_only_vars) is the same case:
+                # count(v) counts this id column, which an OPTIONAL
+                # MATCH's left join leaves null on no match. Joining
+                # it would broadcast every vertex with its properties
+                # on each plan miss, and pin that broadcast in each
+                # cached plan, to read an id the edge already holds
+                if np.var is not None:
+                    nvars.append(var)
                 return df.withColumn(f"{var}__id", F.col(prev_key)), var
             nvars.append(var)
             nd = self._node_df(np, var)
@@ -845,6 +899,7 @@ class _Executor:
     # ------------------------------------------------------------ clauses
 
     def run(self, stmt: P.CypherStatement):
+        self.id_only = _id_only_vars(stmt)
         result = None
         for clause in stmt.clauses:
             if isinstance(clause, P.MatchClause):

@@ -84,6 +84,14 @@ def build_spark(app_name: str = "graphdb_spark", master: str | None = None,
         # Spark rejects by default; read as long, normalized in sources.tpch
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # no per-call call-site capture: PySpark otherwise wraps every
+        # functions.* / Column call in a Python stack walk plus 3-4 py4j
+        # round trips (active session, depth conf, origin set/clear),
+        # about 4x the round trips of planning a Cypher read. Errors
+        # keep their exception and message; only the Python call site
+        # in DataFrameQueryContext is lost. PySpark reads this once per
+        # process, at the first API call with an active session
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
@@ -109,13 +117,21 @@ _GRAPH_VIEWS = ("vertices", "edges")
 _INLINE_LEAVES = ("OneRowRelation", "LocalRelation", "CTERelationRef")
 
 
+@functools.cache
+def _clock_pattern(gateway):
+    """Spark's CURRENT_LIKE tree pattern, resolved once per py4j
+    gateway (one per JVM): the lookup takes a py4j round trip per
+    package-path segment, about 12 per plan-cache miss."""
+    return gateway.jvm.org.apache.spark.sql.catalyst.trees \
+        .TreePattern.CURRENT_LIKE()
+
+
 def _reads_clock(df: DataFrame) -> bool:
     """Whether ``df`` calls a clock function (``current_timestamp()``,
     ``now()``, ``current_date()`` …): Spark fixes its value when it
     optimizes the plan, so a reused plan would keep answering the
     time of its first run."""
-    pattern = df.sparkSession._jvm.org.apache.spark.sql.catalyst.trees \
-        .TreePattern.CURRENT_LIKE()
+    pattern = _clock_pattern(df.sparkSession.sparkContext._gateway)
     return df._jdf.queryExecution().analyzed().containsPattern(pattern)
 
 

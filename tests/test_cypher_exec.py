@@ -743,3 +743,76 @@ def test_anonymous_endpoint_elision_and_dangling_safety(spark):
         f"{njoins}, unvalidated {njoins2}\n--- validated ---\n{plan}\n"
         f"--- unvalidated ---\n{plan2}"
     )
+
+
+def _validated(g):
+    """The same frames as ``g``, marked integrity-validated."""
+    from graphdb_spark.session import GraphSession
+
+    return GraphSession(g.spark, g.vertices, g.edges, assume_integrity=True)
+
+
+def _plan_counts(df):
+    """(joins, broadcast exchanges) in ``df``'s physical plan."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return (len(re.findall(r"\w+Join ", plan)),
+            plan.count("BroadcastExchange"))
+
+
+def test_id_only_endpoint_counts_match_without_elision(person_graph):
+    """count(v) / count(DISTINCT v) over a named endpoint used by id
+    only answer the same with and without the vertex join, and an
+    OPTIONAL MATCH endpoint with no match still counts 0."""
+    g = _validated(person_graph)
+    cases = {
+        "MATCH (a:Person)-[:KNOWS]->(b) "
+        "RETURN a.name AS a, count(b) AS n ORDER BY a": [("Alice", 2)],
+        "MATCH (a:Person)-[]->(b) RETURN count(DISTINCT b) AS n": [(3,)],
+        "MATCH (p:Person) OPTIONAL MATCH (p)-[:KNOWS]->(f) "
+        "RETURN p.name AS p, count(f) AS n ORDER BY p":
+            [("Alice", 2), ("Bob", 0), ("Charlie", 0), ("Diana", 0)],
+        "MATCH (p:Person {name: 'Diana'}) OPTIONAL MATCH (p)-[:KNOWS]->(f) "
+        "RETURN count(f) AS n": [(0,)],
+        "MATCH (a:Person)-[:KNOWS]->(b) WITH count(b) AS n RETURN n": [(2,)],
+    }
+    for q, want in cases.items():
+        assert rows(g.cypher(q)) == want, q
+        assert rows(person_graph.cypher(q)) == want, q
+
+
+def test_id_only_endpoint_drops_its_vertex_join(person_graph):
+    q = ("MATCH (a:Person {name: 'Alice'})-[:KNOWS]->(b) "
+         "RETURN count(b) AS n")
+    joins, broadcasts = _plan_counts(person_graph.cypher(q))
+    elided = _validated(person_graph).cypher(q)
+    assert _plan_counts(elided) == (joins - 1, broadcasts - 1)
+    assert rows(elided) == [(2,)]
+
+
+def test_endpoint_read_beyond_its_id_keeps_the_join(person_graph):
+    from graphdb_spark.operators.mutations import bulk_insert
+
+    g = _validated(person_graph)
+    head = "MATCH (a:Person {name: 'Alice'})-[:KNOWS]->"
+    for q in (
+        head + "(b) RETURN count(b) AS n, collect(b.name) AS names",
+        head + "(b) RETURN b",
+        head + "(b:Person) RETURN count(b) AS n",
+        head + "(b) WITH b RETURN count(b) AS n",
+        head + "(b) MATCH (b) RETURN count(b) AS n",
+        # nodes(p) reads every node of p's pattern
+        "MATCH p=(a:Person)-[:KNOWS]->(b) "
+        "RETURN nodes(p) AS ns, count(b) AS n",
+    ):
+        assert _plan_counts(g.cypher(q)) == \
+            _plan_counts(person_graph.cypher(q)), q
+        assert sorted(rows(g.cypher(q)), key=repr) == \
+            sorted(rows(person_graph.cypher(q)), key=repr), q
+    # a dangling edge may exist after bulk_insert: the join is back
+    g2 = bulk_insert(g, edges=[("alice", "KNOWS", "zz_missing", {})])
+    assert not g2.integrity_validated
+    q = head + "(b) RETURN count(b) AS n"
+    assert _plan_counts(g2.cypher(q)) == _plan_counts(person_graph.cypher(q))
+    assert rows(g2.cypher(q)) == [(2,)]

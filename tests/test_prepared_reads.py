@@ -242,3 +242,53 @@ def test_concurrent_creates_are_not_lost(spark):
     assert not errors
     rows = g.execute("MATCH (n:W) RETURN n.id AS id ORDER BY id").collect()
     assert [r.id for r in rows] == ["w0", "w1", "w2", "w3"]
+
+
+def test_plan_cache_miss_py4j_budget(resident, monkeypatch):
+    # a miss is planned on the driver; its cost is py4j round trips.
+    # PySpark's per-call call-site capture alone made 3-4 per Column
+    # call (373 for a point lookup, 607 for a 1-hop count)
+    from py4j.clientserver import ClientServerConnection
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert not is_debugging_enabled()
+    lookup = "MATCH (c:customer {{id: 'c_{}'}}) RETURN c.id AS budget_id"
+    one_hop = ("MATCH (c:customer {{id: 'c_{}'}})-[:PLACED]->(o) "
+               "RETURN count(o) AS budget_n")
+    for q in (lookup, one_hop):  # warm this state's memos
+        resident.cypher(q.format(30)).collect()
+    send, calls = ClientServerConnection.send_command, [0]
+    me = threading.get_ident()
+
+    def counting(conn, command):
+        # this thread's round trips only: py4j's finalizer thread sends
+        # the releases of earlier, unrelated objects on its own
+        # connection, in batches, at any time
+        if threading.get_ident() == me:
+            calls[0] += 1
+        return send(conn, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+
+    def round_trips(q):
+        calls[0] = 0
+        resident.cypher(q)
+        return calls[0]
+
+    assert 0 < round_trips(lookup.format(31)) <= 120
+    assert 0 < round_trips(one_hop.format(31)) <= 160
+
+
+def test_fresh_one_hop_count_miss_runs_three_jobs(spark, resident):
+    # a plan-cache miss of the serving path's 1-hop count: the customer
+    # broadcast, the count's shuffle map and its result; `o` is read by
+    # id only, so no broadcast of the whole vertex table
+    q = ("MATCH (c:customer {{id: 'c_{}'}})-[:PLACED]->(o) "
+         "RETURN count(o) AS jobs_n")
+    _df_payload(resident.execute(q.format(60)), 1000)  # warm label counts
+    df = resident.execute(q.format(61))
+    (_, got), jobs = _jobs(spark, lambda: _df_payload(df, 1000))
+    assert jobs == 3
+    want = resident.edges.filter(
+        "src = 'c_61' AND relationship = 'PLACED'").count()
+    assert got == [[want]] and want > 0

@@ -81,6 +81,10 @@ def test_invalid_query_is_400_not_500(server):
         "query": "SELECT definitely_not_a_column FROM vertices",
     })
     assert code == 400 and body["status"] == "error"
+    # without call-site capture the error class and message still reach
+    # the client; only PySpark's Python call site is left out
+    assert body["message"].startswith("AnalysisException")
+    assert "definitely_not_a_column" in body["message"]
 
 
 def test_missing_query_field_is_400(server):
