@@ -292,8 +292,7 @@ class _Executor:
         adjacency layout (session.use_bucketed_layout — the Spark twin
         of the reference's forward/reversed edge indexes), else the
         canonical frame. Same rows either way."""
-        by_key = getattr(self.g, "_e_by_key", None) or {}
-        return by_key.get(key, self.g.edges)
+        return self.g._e_by_key.get(key, self.g.edges)
 
     def _edge_base(self, rp: P.RelPattern,
                    key: str | None = None) -> DataFrame:

@@ -61,9 +61,7 @@ def create_vertex(g: GraphSession, vid: str, label: str,
                   props: dict | None = None) -> GraphSession:
     if g.vertices.filter(F.col("id") == vid).limit(1).count() > 0:
         raise VertexExistsError(f"vertex {vid!r} already exists")
-    # pure row-add: goes through the layout-maintaining append path
-    # (an adopted bucketed layout survives the write — the reference
-    # updates its indexes with every put, rdb/managers.rs:233-260)
+    # pure row-add: a union, no anti-join against state
     return g.append_state(vertices=_vrow(g.spark, vid, label, props))
 
 
@@ -240,8 +238,7 @@ def bulk_insert(g: GraphSession, vertices: list[tuple] | None = None,
             "src string, relationship string, dst string, "
             "properties map<string,string>",
         )
-    # pure row-add: the layout-maintaining append path (an adopted
-    # bucketed layout folds the delta in, no REINDEX)
+    # pure row-add: a union, no anti-join against state
     g = g.append_state(vertices=dv, edges=de)
     # validation was skipped: the graph may now hold dangling
     # edges, so the Cypher planner must stop eliding anonymous-

@@ -141,10 +141,9 @@ def write_adjacency(vertices: DataFrame, edges: DataFrame, name: str,
     # ensure_bucketed_layout compares the fingerprints against the
     # session's frames (row counts alone miss count-preserving
     # mutations — VERDICT r9 item 1). Callers that already HOLD the
-    # frames' fingerprints (a compaction — content unchanged by
-    # construction; a REINDEX whose ensure just computed them for the
-    # staleness compare) pass them through; recomputing would be one
-    # full scan per relation of pure waste at 100 TB.
+    # frames' fingerprints (a REINDEX whose ensure just computed them
+    # for the staleness compare) pass them through; recomputing would
+    # be one full scan per relation of pure waste at 100 TB.
     write_layout_meta(
         vertices.sparkSession,
         name,
@@ -174,9 +173,8 @@ def content_fingerprint(df: DataFrame) -> dict:
     changing cardinality), so attaching layout tables on a count
     match could silently serve pre-mutation data. XOR and SUM are
     both commutative, so the fingerprint is independent of
-    partitioning and row order — and both fold forward in O(delta)
-    under appends. The SUM term exists because XOR alone has a
-    structural collision class: any PAIR of identical rows cancels
+    partitioning and row order. The SUM term exists because XOR alone
+    has a structural collision class: any PAIR of identical rows cancels
     (h ^ h = 0), so e.g. {A, A, B} and {B, C, C} share count AND
     XOR while holding different content; their hash sums differ
     unless the colliding rows hash equal. SUM is computed in
@@ -209,18 +207,6 @@ def content_fingerprint(df: DataFrame) -> dict:
         "x": int(row["x"]) if row["x"] is not None else 0,
         "s": str(int(row["s"])) if row["s"] is not None else "0",
     }
-
-
-def append_pressure(meta: dict | None) -> dict:
-    """Per-relation append counters from a layout sidecar, normalizing
-    the legacy scalar form (one global counter) to {"v": n, "e": n}.
-    The single source of truth for the normalization rule — consumed
-    by append_adjacency (increment), GraphSession._reindex (per-
-    relation reset) and compact_layout (pressure-driven targets)."""
-    ap = (meta or {}).get("appends") or {}
-    if isinstance(ap, int):
-        return {"v": ap, "e": ap}
-    return dict(ap)
 
 
 def invalidate_layout_meta(spark, name: str):
@@ -277,13 +263,13 @@ def write_adjacency_table(df: DataFrame, table: str, key: str,
     reports the sortBy order).
 
     autoBucketedScan is disabled for the write: when ``df`` itself
-    reads a bucketed table (compaction / REINDEX reading the previous
-    layout generation), the planner elides the repartition against the
+    reads a bucketed table (a REINDEX reading the previous layout
+    generation), the planner elides the repartition against the
     scan's claimed hash partitioning while the scan still packs files
     by SIZE — tasks then hold mixed buckets and the rewrite emits
-    multi-file buckets, defeating the compaction (measured: 5 files
-    for 4 buckets). A plain file scan makes the repartition real and
-    the output exactly one file per non-empty bucket."""
+    multi-file buckets (measured: 5 files for 4 buckets). A plain
+    file scan makes the repartition real and the output exactly one
+    file per non-empty bucket."""
     spark = df.sparkSession
     conf = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     old = spark.conf.get(conf)
@@ -299,136 +285,6 @@ def write_adjacency_table(df: DataFrame, table: str, key: str,
         )
     finally:
         spark.conf.set(conf, old)
-
-
-def append_adjacency(spark, name: str, buckets: int,
-                     vertices: DataFrame | None = None,
-                     edges: DataFrame | None = None) -> dict:
-    """LSM-style layout append — the incremental half of the
-    reference's per-write index maintenance (rdb/managers.rs:233-260:
-    forward + reversed indexes are updated WITH every write, never
-    rebuilt). New rows are appended into the existing bucketed tables
-    (Spark appends extra files per bucket: hash DISTRIBUTION — the
-    layout's exchange-elision contract — is preserved; the per-bucket
-    one-file sort degrades until compaction, costing at most a local
-    sort, never an exchange) and the stamped content fingerprint is
-    folded forward in O(delta): counts add, XOR accumulates —
-    appending never rescans the base. Returns the updated meta (its
-    ``appends`` counter is the caller's compaction trigger).
-
-    NOT atomic across the three tables (plain parquet appends have no
-    transaction): a failure mid-append leaves extra rows visible in
-    the already-appended tables until the next ensure detects the
-    fingerprint mismatch (meta is written LAST, so it always describes
-    at most what was fully appended) and REINDEXes. The transactional
-    alternative at production scale is the Delta-backed store
-    (sources/delta_store.py), where the append is one commit."""
-    meta = read_layout_meta(spark, name)
-    if meta is None or meta.get("buckets") != buckets:
-        raise ValueError(
-            f"layout {name!r} has no matching spec to append into"
-        )
-    for k in ("v", "e"):
-        entry = meta.get(k)
-        if not isinstance(entry, dict) or "s" not in entry:
-            # missing/truncated relation entry, or a pre-sum-term
-            # sidecar: folding forward would stamp a fingerprint that
-            # does not cover the base rows, poisoning every later
-            # compare. MUST be rejected BEFORE any file append — the
-            # caller's fallback re-unions the delta, so rows
-            # half-appended here would be served twice. (An absent
-            # key hitting _fold AFTER the appends would be exactly
-            # that bug as a KeyError.)
-            raise ValueError(
-                f"layout {name!r} spec is unusable for appends "
-                f"(relation {k!r} entry missing or pre-sum-term)"
-            )
-
-    def _append(df, table, key):
-        # small deltas: one task, at most one new file per non-empty
-        # bucket (an un-coalesced append writes files per task x
-        # bucket — file explosion)
-        (
-            df.coalesce(1)
-            .write.mode("append")
-            .format("parquet")
-            .bucketBy(buckets, key)
-            .sortBy(key)
-            .saveAsTable(table)
-        )
-
-    def _fold(entry, fp):
-        return {
-            "n": entry["n"] + fp["n"],
-            "x": entry["x"] ^ fp["x"],
-            "s": str(int(entry["s"]) + int(fp["s"])),
-        }
-
-    # Pin the deltas ONCE: fingerprint + e_out append + e_in append
-    # evaluate the frame up to three times, and a non-deterministic
-    # delta (limit/sample/monotonically_increasing_id lineage) would
-    # otherwise stamp a fingerprint that never matches the appended
-    # rows — or worse, diverge the two edge copies.
-    if vertices is not None:
-        vertices = vertices.localCheckpoint(eager=True)
-    if edges is not None:
-        edges = edges.localCheckpoint(eager=True)
-
-    # Snapshot each table dir so a mid-append failure (the three
-    # appends are not one transaction) can ROLL BACK to the
-    # pre-append file set: without it, e_out succeeding while e_in
-    # fails leaves the forward and reversed copies disagreeing — and
-    # the session frames read these very tables, so the next REINDEX
-    # would launder the phantom rows into canonical state.
-    import os as _os
-    import shutil as _shutil
-
-    tables = [f"{name}_v", f"{name}_e_out", f"{name}_e_in"]
-    pre = {}
-    for t in tables:
-        loc = adjacency_table_location(spark, t)
-        pre[t] = (loc, set(_os.listdir(loc)) if _os.path.isdir(loc)
-                  else set())
-    try:
-        if vertices is not None:
-            fp = content_fingerprint(vertices)
-            _append(vertices, f"{name}_v", "id")
-            meta["v"] = _fold(meta["v"], fp)
-        if edges is not None:
-            fp = content_fingerprint(edges)
-            _append(edges, f"{name}_e_out", "src")
-            _append(edges, f"{name}_e_in", "dst")
-            meta["e"] = _fold(meta["e"], fp)
-    except BaseException:
-        for t, (loc, had) in pre.items():
-            try:
-                for f in set(_os.listdir(loc)) - had:
-                    p = _os.path.join(loc, f)
-                    if _os.path.isdir(p):
-                        _shutil.rmtree(p, ignore_errors=True)
-                    else:
-                        _os.remove(p)
-                spark.catalog.refreshTable(t)
-            except OSError:
-                pass  # best-effort; meta stays unwritten → REINDEX
-        raise
-    # PER-RELATION append pressure (r10): compaction rewrites only
-    # relations that actually accumulated files — at 100 TB an
-    # edge-only ingest stream must never force the pristine (and
-    # comparably huge) vertex table through a rewrite.
-    ap = append_pressure(meta)
-    if vertices is not None:
-        ap["v"] = ap.get("v", 0) + 1
-    if edges is not None:
-        ap["e"] = ap.get("e", 0) + 1
-    meta["appends"] = ap
-    write_layout_meta(spark, name, meta)
-    for sfx in ("_v", "_e_out", "_e_in"):
-        # drop any cached scan + stale file listing: a cached plan
-        # keyed on the same table would silently serve the
-        # pre-append snapshot
-        spark.catalog.refreshTable(f"{name}{sfx}")
-    return meta
 
 
 def adjacency_table_location(spark, table: str) -> str:

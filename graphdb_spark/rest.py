@@ -71,6 +71,22 @@ def _df_payload(df, limit: int):
     ]
 
 
+def _envelope(payload) -> tuple[str, int]:
+    """``(query, limit)`` of a request body, checked before anything is
+    planned: an object whose ``query`` is a string and whose optional
+    ``limit`` is a non-negative integer. Raises KeyError or ValueError
+    otherwise."""
+    if not isinstance(payload, dict):
+        raise ValueError("body must be a JSON object")
+    query = payload["query"]
+    if not isinstance(query, str):
+        raise ValueError("query must be a string")
+    limit = payload.get("limit", DEFAULT_ROW_LIMIT)
+    if isinstance(limit, bool) or not isinstance(limit, int) or limit < 0:
+        raise ValueError("limit must be a non-negative integer")
+    return query, limit
+
+
 class _Handler(BaseHTTPRequestHandler):
     server_version = "graphdb-spark-rest"
 
@@ -101,13 +117,13 @@ class _Handler(BaseHTTPRequestHandler):
             return
         try:
             n = int(self.headers.get("Content-Length", "0"))
-            payload = json.loads(self.rfile.read(n) or b"{}")
-            query = payload["query"]
-        except (KeyError, ValueError, json.JSONDecodeError) as exc:
+            if n < 0:  # read(-1) would wait for the client to hang up
+                raise ValueError("Content-Length must not be negative")
+            query, limit = _envelope(json.loads(self.rfile.read(n) or b"{}"))
+        except (KeyError, ValueError) as exc:
             self._json(400, {"status": "error",
                              "message": f"invalid request: {exc}"})
             return
-        limit = int(payload.get("limit", DEFAULT_ROW_LIMIT))
         lang = _detect_language(query)
         extra = {}
         try:

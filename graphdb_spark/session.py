@@ -41,6 +41,15 @@ from graphdb_spark.datamodel import (
 from graphdb_spark.translator import NotIndexedError, QueryOutput, Translator
 
 
+def default_driver_memory(phys_bytes: int) -> str:
+    """Driver heap for a machine with ``phys_bytes`` of physical
+    memory: half of it, capped at 16g, in whole MiB (a JVM memory
+    string). The other half stays with Python workers, the page cache
+    and the JVM's off-heap memory; a heap sized past the machine grows
+    until the kernel kills something."""
+    return f"{min(phys_bytes // 2, 16 << 30) >> 20}m"
+
+
 def build_spark(app_name: str = "graphdb_spark", master: str | None = None,
                 shuffle_partitions: int | None = None) -> SparkSession:
     """Opinionated SparkSession for this engine.
@@ -60,8 +69,11 @@ def build_spark(app_name: str = "graphdb_spark", master: str | None = None,
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
     # local-mode driver == the whole "cluster": the 1g default heap
     # GC-thrashes (GCLocker retry crashes) on >SF0.1 shuffles; only
-    # effective before the JVM launches, so set it here, not per-query
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    # effective before the JVM launches, so set it here, not per-query.
+    # SPARK_GRAFT_DRIVER_MEM pins it for a deployment
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or \
+        default_driver_memory(
+            os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE"))
     spark = (
         b.config("spark.driver.memory", driver_mem)
         .config("spark.driver.maxResultSize", "4g")
@@ -201,9 +213,6 @@ def bounded(df: DataFrame, n: int) -> DataFrame:
     return prepared[1]
 
 
-from graphdb_spark.partitioning import append_pressure as _append_pressure
-
-
 class GraphSession:
     """Two-DataFrame property graph + KV store + query surfaces."""
 
@@ -251,12 +260,11 @@ class GraphSession:
         # cannot drift.
         self._state_version = 0
         self._layout_valid: dict = {}  # name -> (state_version, buckets)
-        # currently adopted layout (None when on plain frames) —
-        # append_state/compact_layout maintain it incrementally
+        # currently adopted layout (None when on plain frames); every
+        # graph swap divorces it
         self._layout_name: str | None = None
-        self._layout_buckets = 0
-        self._layout_cached = False
-        self._layout_shared = False
+        # enable_skew_salting fills this
+        self._hot_endpoints: dict | None = None
         # writers hold _write_lock across read-modify-set_state (it is
         # re-entrant: a Cypher DML statement may swap state twice);
         # _cache_lock guards the read plan cache's LRU bookkeeping —
@@ -330,15 +338,13 @@ class GraphSession:
             # the written tables describe the PREVIOUS state. The
             # canonical _v/_e frames (just swapped) stay correct; hops
             # simply lose the exchange-elision until
-            # use_bucketed_layout() is re-run. (Row-ADD mutations
-            # should go through append_state instead — it maintains
-            # the layout WITH the write.) A KV-ONLY swap skips all of
-            # this: vertices/edges are bit-identical, so the layout,
-            # the graph memos, and the plan cache (cached Cypher plans
-            # are MATCH reads over the v/e views; Cypher KV reads go
-            # through kv_retrieve, a per-call collect that is never
-            # plan-cached) all remain valid — a kv_insert must not
-            # cost the session its exchange-elision contract.
+            # ensure_bucketed_layout() is re-run. A KV-ONLY swap skips
+            # all of this: vertices/edges are bit-identical, so the
+            # layout, the graph memos, and the plan cache (cached
+            # Cypher plans are MATCH reads over the v/e views; Cypher
+            # KV reads go through kv_retrieve, a per-call collect that
+            # is never plan-cached) all remain valid — a kv_insert
+            # must not cost the session its exchange-elision contract.
             self._e_by_key = {}
             self._layout_name = None
             self._register_views()
@@ -351,8 +357,7 @@ class GraphSession:
     @serialized
     def use_bucketed_layout(self, name: str = "graph_adj",
                             buckets: int = 32, write: bool = True,
-                            cache: bool = False,
-                            shared: bool = False) -> "GraphSession":
+                            cache: bool = False) -> "GraphSession":
         """Adopt the dual bucketed adjacency layout
         (``partitioning.write_adjacency``): vertices bucketed by id,
         edges stored twice — bucketed by src (forward) and by dst
@@ -370,9 +375,11 @@ class GraphSession:
         canChangeCachedPlanOutputPartitioning=false semantics (Spark
         default).
 
-        Layout is an *optimization contract*, not state: mutations via
-        set_state invalidate it (hops fall back to the canonical
-        frames) — re-run after bulk loads, like a REINDEX."""
+        Layout is an *optimization contract*, not state: every graph
+        mutation (``set_state``, ``append_state``) divorces it, hops
+        fall back to the canonical frames, and the tables stay as
+        written — re-run ``ensure_bucketed_layout`` after bulk loads,
+        like a REINDEX."""
         from graphdb_spark import partitioning as P
 
         if write:
@@ -385,14 +392,6 @@ class GraphSession:
         self._e = e_out  # canonical scan order: forward copy
         self._e_by_key = {"src": e_out, "dst": e_in}
         self._layout_name = name
-        self._layout_buckets = buckets
-        self._layout_cached = cache
-        # session-OWNED by default (mutations may maintain the tables
-        # in place via append_state); shared=True marks a cross-
-        # process cache of immutable dataset state that must never
-        # absorb this session's mutations (see append_state). A flag,
-        # not a post-hoc attribute: re-adoption re-states ownership.
-        self._layout_shared = shared
         self._register_views()
         # frames changed identity: derived memos are stale (dropped
         # last, as in set_state)
@@ -416,7 +415,6 @@ class GraphSession:
                                buckets: int = 32,
                                cache: bool = False,
                                assume_immutable: bool = False,
-                               shared: bool = False,
                                ) -> "GraphSession":
         """Adopt the dual bucketed adjacency, REUSING tables a prior
         process already wrote under ``name`` when they still describe
@@ -463,9 +461,8 @@ class GraphSession:
         ) and all(
             spark.catalog.tableExists(t) for t in tables
         ):
-            return self.use_bucketed_layout(
-                name, buckets, write=False, cache=cache, shared=shared
-            )
+            return self.use_bucketed_layout(name, buckets, write=False,
+                                            cache=cache)
         try:
             # same-process catalog hit, or cross-process re-attach over
             # the surviving warehouse files (P.attach_adjacency) —
@@ -503,9 +500,8 @@ class GraphSession:
         if stale:
             self._reindex(name, buckets, stale, fp_v=fp_v, fp_e=fp_e)
         self._layout_valid[name] = (self._state_version, buckets)
-        return self.use_bucketed_layout(
-            name, buckets, write=False, cache=cache, shared=shared
-        )
+        return self.use_bucketed_layout(name, buckets, write=False,
+                                        cache=cache)
 
     def _reindex(self, name: str, buckets: int, stale: set,
                  fp_v: dict | None = None, fp_e: dict | None = None):
@@ -546,9 +542,8 @@ class GraphSession:
             # full REINDEX: write_adjacency stamps fresh meta into the
             # staged _v dir; the renames carry it into place
             # pass any fingerprints the caller already holds (ensure's
-            # staleness compare computed them; compaction's content is
-            # unchanged by construction) — write_adjacency stamps them
-            # instead of paying one recompute scan per relation
+            # staleness compare computed them) — write_adjacency stamps
+            # them instead of paying one recompute scan per relation
             P.write_adjacency(self._v, self._e, stage, buckets,
                               fp_v=fp_v, fp_e=fp_e)
             renamed = 0
@@ -622,139 +617,19 @@ class GraphSession:
             if "v" in stale else old_meta.get("v"),
             "e": (fp_e or P.content_fingerprint(self._e))
             if "e" in stale else old_meta.get("e"),
-            # a rewrite compacts what it touches; appended files may
-            # survive on the untouched relation, so keep its pressure
-            "appends": {
-                k: 0 if k in stale else _append_pressure(old_meta).get(k, 0)
-                for k in ("v", "e")
-            },
         })
-
-    #: compaction (per-relation rewrite) triggers after this many
-    #: layout appends on any one relation
-    #: (multi-file buckets keep hash distribution — the exchange-
-    #: elision contract — but each append adds a file per non-empty
-    #: bucket; past this point the one-file-per-bucket sort contract
-    #: is worth restoring). The reference's analogue is the LSM
-    #: memtable flush -> SST compaction cycle its RocksDB backend
-    #: runs continuously.
-    LAYOUT_COMPACT_APPENDS = 16
 
     @serialized
     def append_state(self, vertices: DataFrame | None = None,
                      edges: DataFrame | None = None) -> "GraphSession":
-        """Row-ADD mutation (create_vertex / bulk_insert): when a
-        bucketed layout is adopted, the new rows are APPENDED into the
-        layout tables and the stamped fingerprint folds forward in
-        O(delta) (``partitioning.append_adjacency``) — the layout
-        survives the write with NO REINDEX, closing the reference's
-        per-write index-maintenance gap (rdb/managers.rs:233-260)
-        incrementally instead of by full rebuild. Hash distribution is
-        preserved, so hops keep their exchange elision over the
-        appended state; per-bucket sort degrades to multi-file until
-        compaction (auto past LAYOUT_COMPACT_APPENDS appends). Without
-        an adopted layout this is plain union + set_state.
-
-        Ownership rule: the in-place append only runs on a layout this
-        session OWNS. A SHARED adoption (``_layout_shared`` — e.g.
-        graph_session's signature-keyed default layout, a cache of
-        IMMUTABLE dataset state reused across processes) must never
-        absorb one session's mutations: the rows would pollute every
-        later reader's re-attach (the fingerprint guard would catch it
-        and force them all to rewrite). Mutating a shared adoption
-        falls back to plain union + set_state — the session simply
-        divorces the layout, exactly like any other mutation."""
-        name = self._layout_name
-        if name is None or getattr(self, "_layout_shared", False):
-            v = (self._v.unionByName(vertices)
-                 if vertices is not None else None)
-            e = self._e.unionByName(edges) if edges is not None else None
-            return self.set_state(vertices=v, edges=e)
-        from graphdb_spark import partitioning as P
-
-        try:
-            meta = P.append_adjacency(self.spark, name,
-                                      self._layout_buckets,
-                                      vertices=vertices, edges=edges)
-        except Exception as exc:
-            # Two classes, one recovery. ValueError = unusable sidecar
-            # spec (bucket mismatch / pre-sum-term / truncated entry),
-            # rejected before any file touched. Anything else = a
-            # failed append, which append_adjacency ROLLED BACK to the
-            # pre-append file set (its three appends are not one
-            # transaction; without the rollback a half-appended delta
-            # would diverge the forward/reversed copies and the next
-            # REINDEX — sourced from these very tables — would launder
-            # the phantom rows into canonical state). Either way the
-            # tables hold exactly the pre-append rows, so the plain
-            # union + set_state divorce is correct, same as any other
-            # mutation; the next ensure REINDEXes with a fresh spec.
-            if not isinstance(exc, ValueError):
-                import sys
-
-                print(
-                    f"# append_state: layout append failed ({exc!r});"
-                    " rolled back, divorcing layout",
-                    file=sys.stderr,
-                )
-            # re-resolve the base tables FRESH: the session's existing
-            # frame objects pinned their relation (and file listing)
-            # at an earlier analysis, and an append+rollback cycle
-            # leaves such pinned listings pointing at deleted files —
-            # refreshTable fixes the catalog, not already-analyzed
-            # DataFrames (measured: the stale object throws
-            # FAILED_READ_FILE.FILE_NOT_EXIST; a fresh spark.table
-            # resolves clean)
-            v0, e0, _e_in = P.load_adjacency(self.spark, name)
-            v = v0.unionByName(vertices) if vertices is not None else v0
-            e = e0.unionByName(edges) if edges is not None else e0
-            return self.set_state(vertices=v, edges=e)
-        # it IS a mutation: version bumps and derived memos drop, but
-        # the layout was maintained WITH the write, so re-adopt it
-        self._mutation_count += 1
-        self._state_version += 1
-        cache = self._layout_cached
-        g = self.use_bucketed_layout(name, self._layout_buckets,
-                                     write=False, cache=cache,
-                                     shared=self._layout_shared)
-        self._layout_valid[name] = (self._state_version,
-                                    self._layout_buckets)
-        pressure = _append_pressure(meta)
-        if pressure and max(pressure.values()) >= self.LAYOUT_COMPACT_APPENDS:
-            g = g.compact_layout()
-        return g
-
-    def compact_layout(self) -> "GraphSession":
-        """Restore one-file-per-bucket on the adopted layout (the
-        compaction half of append_state's LSM cycle) via the staged
-        REINDEX — PER RELATION: only relations that actually
-        accumulated append files are rewritten, so an edge-only ingest
-        stream never forces the pristine (and comparably huge) vertex
-        table through a rewrite at compaction time. Compaction does
-        not change content, so the already-folded fingerprints are
-        passed through instead of being recomputed (saves a full scan
-        per relation). No-op on plain frames or a pressure-free
-        layout."""
-        from graphdb_spark import partitioning as P
-
-        name = self._layout_name
-        if name is None:
-            return self
-        buckets, cache = self._layout_buckets, self._layout_cached
-        meta = P.read_layout_meta(self.spark, name)
-        pressure = _append_pressure(meta)
-        stale = {k for k, n in pressure.items() if n}
-        if meta is None:
-            stale = {"v", "e"}  # no trustworthy spec: restore fully
-        elif not stale:
-            return self  # every bucket is already one file
-        self._reindex(name, buckets, stale,
-                      fp_v=(meta or {}).get("v"),
-                      fp_e=(meta or {}).get("e"))
-        self._layout_valid[name] = (self._state_version, buckets)
-        return self.use_bucketed_layout(name, buckets, write=False,
-                                        cache=cache,
-                                        shared=self._layout_shared)
+        """Row-ADD mutation (create_vertex / bulk_insert / the streaming
+        insert fold): union the new rows onto the current frames and
+        swap them in. Like any graph swap it divorces an adopted
+        layout; a later ``ensure_bucketed_layout`` re-indexes the
+        relations the rows made stale."""
+        v = self._v.unionByName(vertices) if vertices is not None else None
+        e = self._e.unionByName(edges) if edges is not None else None
+        return self.set_state(vertices=v, edges=e)
 
     def edges_for(self, direction: str) -> DataFrame:
         """Direction-appropriate edge frame: the copy bucketed on the
@@ -762,16 +637,14 @@ class GraphSession:
         dst), else the canonical frame. 'both' has no single hop key —
         callers pass ``edges_for('out')`` plus ``reversed_edges()`` so
         each orientation half reads its own-key copy."""
-        by_key = getattr(self, "_e_by_key", None) or {}
         key = {"out": "src", "in": "dst"}.get(direction)
-        return by_key.get(key, self._e)
+        return self._e_by_key.get(key, self._e)
 
     def reversed_edges(self) -> DataFrame | None:
         """The dst-keyed copy when adopted (for both-direction hops'
         ``edges_in``), else None (callers fall back to the single
         frame)."""
-        by_key = getattr(self, "_e_by_key", None) or {}
-        return by_key.get("dst")
+        return self._e_by_key.get("dst")
 
     # ------------------------------------------------------------ ingest
 
@@ -846,9 +719,9 @@ class GraphSession:
         return Translator(
             self._v, self._e,
             strict_indexing=self.strict_indexing, indexed=self._indexed,
-            hot_endpoints=getattr(self, "_hot_endpoints", None),
+            hot_endpoints=self._hot_endpoints,
             frontier_cache=frontier_cache,
-            edges_by_key=getattr(self, "_e_by_key", None),
+            edges_by_key=self._e_by_key,
         )
 
     def enable_skew_salting(self, threshold: int = 1000):

@@ -394,8 +394,8 @@ def _aligned(df: DataFrame, prev: dict, op: str) -> DataFrame:
 
 def append(df: DataFrame, path: str, retries: int = 10,
            txn: tuple | None = None) -> int:
-    """Add rows; previous files untouched (one O(delta) commit — the
-    partitioning.append_adjacency model, here with a real log).
+    """Add rows; previous files untouched (one O(delta) commit that
+    lists only the new files).
 
     ``txn=(app, epoch)`` makes the commit IDEMPOTENT per writer: a
     replayed epoch (a restarted streaming query re-delivering a

@@ -114,15 +114,10 @@ def fold_appends(g, batch: DataFrame, validate: bool = True) -> None:
     """Insert-only fold — the APPEND path of the streaming ingest
     story, for the dominant 100 TB stream shape (event edges arrive,
     entities are never rewritten). Routes through
-    ``GraphSession.append_state``: on a session-OWNED bucketed layout
-    the rows are APPENDED into the layout tables with the stamped
-    fingerprint folded forward in O(delta)
-    (``partitioning.append_adjacency``) and compaction auto-triggers
-    past the threshold — the reference's per-write index maintenance
-    (rdb/managers.rs:233-260) as a streaming micro-batch, with NO
-    per-batch REINDEX. :func:`fold_changes`, by contrast, supports
-    upserts/deletes and must divorce any layout every batch (its swap
-    rewrites state wholesale).
+    ``GraphSession.append_state``: the batch's rows are unioned onto
+    the current frames, with no anti-join against state.
+    :func:`fold_changes`, by contrast, supports upserts/deletes and
+    rewrites state wholesale. Either swap divorces an adopted layout.
 
     Contract (same as :func:`incremental_degree_view`): the stream
     carries only ``op='upsert'`` rows for NEW entities — a clean CDC
@@ -133,9 +128,7 @@ def fold_appends(g, batch: DataFrame, validate: bool = True) -> None:
     raises loudly instead of silently appending them as rows.
 
     ``validate=True`` drops edges whose endpoints exist in neither
-    current state nor this batch's vertex adds — the semi-join probes
-    the vertex relation on its bucket key (id), so an adopted layout
-    serves it with zero state-side exchange. ``validate=False`` skips
+    current state nor this batch's vertex adds. ``validate=False`` skips
     the check and clears ``integrity_validated`` (bulk_insert
     semantics: dangling edges possible)."""
     batch = batch.localCheckpoint(eager=True)  # consumed several times
@@ -165,11 +158,10 @@ def fold_appends(g, batch: DataFrame, validate: bool = True) -> None:
             .join(vids.withColumnRenamed("id", "dst"), "dst", "left_semi")
             .select("src", "relationship", "dst", "properties")
         )
-    # pass None for an empty side: appending zero rows would still
-    # bump that relation's append-pressure counter (and eventually
-    # force a pointless compaction of a pristine table); the probes
-    # are local scans over the checkpointed batch. A fully empty
-    # micro-batch is a no-op — no state-version bump, no meta write.
+    # pass None for an empty side, which keeps that frame as it is;
+    # the probes are local scans over the checkpointed batch. A fully
+    # empty micro-batch is a no-op — no state swap, so the read memos
+    # and any adopted layout survive it.
     v_arg = None if v_new.isEmpty() else v_new
     e_arg = None if e_new.isEmpty() else e_new
     if v_arg is None and e_arg is None:
@@ -183,9 +175,9 @@ def apply_append_stream(g, adds: DataFrame, checkpoint_dir: str,
                         available_now: bool = True, validate: bool = True,
                         on_update=None):
     """Attach an insert-only CDC stream to the session: every
-    micro-batch appends via :func:`fold_appends` — layout-maintaining
-    ingest (see that contract). ``on_update(g, batch_id)`` runs after
-    each fold, as in :func:`apply_change_stream`."""
+    micro-batch appends via :func:`fold_appends` (see that contract).
+    ``on_update(g, batch_id)`` runs after each fold, as in
+    :func:`apply_change_stream`."""
     if not adds.isStreaming:
         raise ValueError("adds must be a streaming DataFrame; "
                          "use fold_appends() for batch")

@@ -139,13 +139,8 @@ def graph_session(spark, sf_dir) -> GraphSession:
                 # signature and the session is freshly built from
                 # exactly those files — adoption re-checks row counts
                 # (metadata-only) instead of full-column fingerprints
-                # shared=True: the signature-keyed layout is a cross-
-                # process cache of the immutable dataset — this
-                # session's mutations must never be appended into it
-                # (append_state falls back to plain union + set_state)
                 g.ensure_bucketed_layout(name, ADJ_BUCKETS, cache=True,
-                                         assume_immutable=True,
-                                         shared=True)
+                                         assume_immutable=True)
                 print(
                     f"# graph_session: bucketed layout '{name}' adopted "
                     f"in {time.perf_counter() - t0:.2f}s",

@@ -900,30 +900,16 @@ QUERIES["stream_incremental_dedup"] = (
 )
 
 
-# --------------------------- insert-only ingest through the layout-
-# maintaining append path (round 10)
-
-#: per-process sequence for the layout names this constituent writes —
-#: each run gets a fresh name and drops it, so repeated gate/bench
-#: runs never race each other's tables
-_APPEND_INGEST_SEQ = 0
+# --------------------------- insert-only streaming ingest
 
 
 def stream_append_ingest(spark, sf_dir):
     """Eighth TRUE Structured Streaming execution — the INSERT-ONLY
     ingest topology (streaming/graph_updates.apply_append_stream):
     edge adds arrive in micro-batches (maxFilesPerTrigger=1) and each
-    foreachBatch routes through GraphSession.append_state, so the
-    adopted bucketed layout is maintained WITH the write —
-    partitioning.append_adjacency appends O(delta) files per bucket
-    and folds the stamped content fingerprint forward; a final
-    compact_layout() restores one-file-per-bucket on exactly the
-    relations that accumulated appends (edges here — the vertex table
-    stays pristine and must not rewrite). This is the reference's
-    per-write index maintenance (rdb/managers.rs:233-260) as a
-    production Kafka-CDC ingest loop: no per-batch REINDEX, no state
-    rewrite, endpoint validation probing the vertex relation on its
-    bucket key.
+    foreachBatch routes through GraphSession.append_state, which
+    unions the validated rows onto state — a Kafka-CDC ingest loop
+    with no per-batch anti-join against state.
 
     Deterministic construction (both engines read the same events
     parquet): base vertices = one 'a_<u>' per distinct user_id; the
@@ -936,19 +922,8 @@ def stream_append_ingest(spark, sf_dir):
     inserts commute — so unlike stream_apply_changelog no mtime
     pinning is needed.
 
-    Layout adoption is an optimization contract, never load-bearing
-    for the result: if the warehouse is unusable the constituent
-    degrades to plain frames (append_state falls back to plain
-    union), same values.
-
     Output: (id, label, out_degree, in_degree) per base vertex,
-    zero-filled, ordered — materialized via localCheckpoint BEFORE
-    the layout tables are dropped so the returned frame never reads
-    deleted files."""
-    import os
-    import sys
-
-    from graphdb_spark import partitioning as P
+    zero-filled, ordered."""
     from graphdb_spark.datamodel import empty_edges, scratch_dir
     from graphdb_spark.streaming.graph_updates import (
         apply_append_stream,
@@ -985,40 +960,18 @@ def stream_append_ingest(spark, sf_dir):
         (adds.filter(F.pmod(F.xxhash64("src", "dst"), F.lit(2)) == i)
          .coalesce(1).write.mode("overwrite").parquet(f"{stage}/b{i}"))
 
-    global _APPEND_INGEST_SEQ
-    _APPEND_INGEST_SEQ += 1
-    name = f"gate_appsink_{os.getpid():x}_{_APPEND_INGEST_SEQ}"
     g = GraphSession(spark, base_v, empty_edges(spark),
                      assume_integrity=True)
-    adopted = False
-    try:
-        g.use_bucketed_layout(name, buckets=4)
-        adopted = True
-    except Exception as exc:  # noqa: BLE001 — optimization, not semantics
-        print(
-            f"# stream_append_ingest: layout adoption failed ({exc!r}); "
-            "continuing on plain frames",
-            file=sys.stderr,
+    with _scoped_stream_shuffle(spark, stage):
+        q = apply_append_stream(
+            g,
+            change_stream_from_files(
+                spark, f"{stage}/b*", max_files_per_trigger=1
+            ),
+            checkpoint_dir=ckpt,
         )
-    try:
-        with _scoped_stream_shuffle(spark, stage):
-            q = apply_append_stream(
-                g,
-                change_stream_from_files(
-                    spark, f"{stage}/b*", max_files_per_trigger=1
-                ),
-                checkpoint_dir=ckpt,
-            )
-            q.awaitTermination()
-        if adopted and g._layout_name == name:
-            g.compact_layout()
-        return _final_degrees(spark, sf_dir, g).localCheckpoint(eager=True)
-    finally:
-        if adopted:
-            try:
-                P.drop_adjacency(spark, name)
-            except Exception:  # noqa: BLE001 — best-effort cleanup
-                pass
+        q.awaitTermination()
+    return _final_degrees(spark, sf_dir, g)
 
 
 STREAM_APPEND_SQL = f"""

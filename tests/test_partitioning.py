@@ -577,94 +577,6 @@ def _dir_state(spark, table):
     }
 
 
-def test_append_state_maintains_layout(spark, adj_graph):
-    """VERDICT r9 item 2 (incremental index maintenance): a row-ADD
-    mutation through append_state keeps the adopted layout live — the
-    delta is APPENDED into the bucketed tables (base files untouched),
-    the stamped fingerprint folds forward in O(delta), hops see the
-    new rows, and groupBy on the bucket key stays exchange-free. The
-    folded fingerprint must equal a from-scratch recompute: a fresh
-    session holding the identical post-append state attaches without
-    any rewrite."""
-    from graphdb_spark import partitioning as P
-    from graphdb_spark.algebra import Q
-    from graphdb_spark.datamodel import local_df
-    from graphdb_spark.session import GraphSession
-
-    g, name = adj_graph, "t_adj_app"
-    plain_v, plain_e = g.vertices, g.edges  # pre-adoption frames
-    try:
-        g.ensure_bucketed_layout(name, buckets=4)
-        base = g.get(Q.edges().count())[-1].count
-        base_files = _dir_state(spark, f"{name}_e_out")
-        dv = local_df(spark, [("o_new_1", "order", {}),
-                              ("o_new_2", "order", {})], _V_SCHEMA)
-        de = local_df(spark, [("c_0", "PLACED", "o_new_1", {}),
-                              ("c_1", "PLACED", "o_new_2", {})], _E_SCHEMA)
-        g = g.append_state(vertices=dv, edges=de)
-        assert g._e_by_key, "layout must survive the append"
-        assert g.get(Q.edges().count())[-1].count == base + 2
-        now = _dir_state(spark, f"{name}_e_out")
-        assert base_files < now, "append must keep base files intact"
-        # the new edge is traversable through the layout copies
-        ids = {r["id"] for r in g.df(
-            Q.specific_vertices("c_0").outbound(t="PLACED").inbound()
-        ).collect()}
-        assert "o_new_1" in ids
-        # bucket-key aggregate still exchange-free over appended state
-        plan = (g.edges.groupBy("src").count()
-                ._jdf.queryExecution().executedPlan().toString())
-        assert "Exchange" not in plan, plan
-        # incremental fold == recompute: an independent session with
-        # the identical post-append state ATTACHES, no rewrite
-        g2 = GraphSession(
-            spark, plain_v.unionByName(dv), plain_e.unionByName(de),
-            assume_integrity=True,
-        )
-        g2.ensure_bucketed_layout(name, buckets=4)
-        assert _dir_state(spark, f"{name}_e_out") == now
-        assert g2.get(Q.edges().count())[-1].count == base + 2
-    finally:
-        P.drop_adjacency(spark, name)
-
-
-def test_append_state_compaction(spark, adj_graph):
-    """Past LAYOUT_COMPACT_APPENDS appends the layout compacts back to
-    one file per bucket (staged REINDEX), results unchanged — and only
-    the relations that ACCUMULATED append files are rewritten: an
-    edge-only append stream must leave the pristine vertex table's
-    files byte-identical (at 100 TB the vertex table is comparably
-    huge; compacting it for edge pressure is a wasted rewrite)."""
-    from graphdb_spark import partitioning as P
-    from graphdb_spark.algebra import Q
-    from graphdb_spark.datamodel import local_df
-
-    g, name = adj_graph, "t_adj_cmp"
-    try:
-        g.ensure_bucketed_layout(name, buckets=4)
-        base = g.get(Q.edges().count())[-1].count
-        v_files = _dir_state(spark, f"{name}_v")
-        g.LAYOUT_COMPACT_APPENDS = 2  # instance override for the test
-        for i in range(2):
-            g = g.append_state(edges=local_df(
-                spark, [("c_0", "PLACED", f"o_x{i}", {})], _E_SCHEMA))
-        # compaction ran: one file per (non-empty) bucket again
-        files = _dir_state(spark, f"{name}_e_out")
-        assert len(files) <= 4, files
-        ap = (P.read_layout_meta(spark, name) or {}).get("appends")
-        assert ap == {"v": 0, "e": 0}, ap
-        # edge-only pressure: the vertex table was not rewritten
-        assert _dir_state(spark, f"{name}_v") == v_files
-        assert g.get(Q.edges().count())[-1].count == base + 2
-        assert g._e_by_key
-        # pressure-free compact is a no-op (no rewrite to do)
-        e_files = _dir_state(spark, f"{name}_e_out")
-        g = g.compact_layout()
-        assert _dir_state(spark, f"{name}_e_out") == e_files
-    finally:
-        P.drop_adjacency(spark, name)
-
-
 def test_partial_reindex_rewrites_only_stale_relation(spark, adj_graph):
     """Per-relation fingerprints make REINDEX partial: a vertex-only
     content mutation must rewrite the ONE vertex table and leave the
@@ -735,28 +647,38 @@ def test_assume_immutable_shortcut_voided_by_mutation(spark, adj_graph):
 
 
 def test_append_state_respects_shared_layout(spark, adj_graph):
-    """A SHARED adoption (graph_session's signature-keyed default) is
-    a cross-process cache of immutable dataset state: append_state
-    must NOT write one session's mutations into it — it falls back to
-    plain union + set_state (layout divorced, table files untouched),
-    so later readers still re-attach the clean tables."""
+    """One write path: a row-add on an adopted layout unions the row
+    onto the session's frames and divorces the layout, leaving every
+    layout table's files as they were, so other sessions that attach
+    the same tables still read the state those tables describe. A
+    later ensure re-indexes only the relation the row made stale (the
+    two edge copies here), and hops over the re-adopted layout see the
+    new row."""
     from graphdb_spark import partitioning as P
     from graphdb_spark.algebra import Q
     from graphdb_spark.datamodel import local_df
 
     g, name = adj_graph, "t_adj_shared"
+    tables = ("_v", "_e_out", "_e_in")
     try:
-        g.ensure_bucketed_layout(name, buckets=4, shared=True)
-        base_files = _dir_state(spark, f"{name}_e_out")
+        g.ensure_bucketed_layout(name, buckets=4)
+        before = {t: _dir_state(spark, f"{name}{t}") for t in tables}
         n0 = g.get(Q.edges().count())[-1].count
+        hop = Q.specific_vertices("c_0").outbound(t="PLACED").inbound()
+        assert "o_299" not in {r["id"] for r in g.df(hop).collect()}
         g = g.append_state(edges=local_df(
-            spark, [("c_0", "PLACED", "o_shared_x", {})], _E_SCHEMA))
-        # session sees the new row, the shared tables do NOT
+            spark, [("c_0", "PLACED", "o_299", {})], _E_SCHEMA))
+        # the session sees the new row, the layout tables do NOT
         assert g.get(Q.edges().count())[-1].count == n0 + 1
-        assert _dir_state(spark, f"{name}_e_out") == base_files
-        assert g._layout_name is None  # divorced, like any mutation
-        meta = P.read_layout_meta(spark, name)
-        assert meta and meta.get("appends", 0) == 0
+        assert {t: _dir_state(spark, f"{name}{t}") for t in tables} == before
+        assert g._layout_name is None and not g._e_by_key
+        g.ensure_bucketed_layout(name, buckets=4)
+        assert g._layout_name == name and g._e_by_key
+        assert _dir_state(spark, f"{name}_v") == before["_v"]
+        for t in ("_e_out", "_e_in"):
+            assert _dir_state(spark, f"{name}{t}") != before[t], t
+        assert g.get(Q.edges().count())[-1].count == n0 + 1
+        assert "o_299" in {r["id"] for r in g.df(hop).collect()}
     finally:
         P.drop_adjacency(spark, name)
 
@@ -778,40 +700,6 @@ def test_fingerprint_sum_breaks_xor_pair_collision(spark):
     assert fp1["x"] == fp2["x"], "premise: the XOR collision is real"
     assert fp1["s"] != fp2["s"]
     assert fp1 != fp2
-
-
-def test_append_state_divorces_on_presum_sidecar(spark, adj_graph):
-    """A sidecar stamped before the hash-sum term cannot fold forward
-    (the folded sum would not cover the base rows, poisoning every
-    later compare). append_state must degrade to plain union +
-    set_state — the same divorce as any other mutation — leaving the
-    old tables' files untouched."""
-    import json
-
-    from graphdb_spark import partitioning as P
-    from graphdb_spark.algebra import Q
-    from graphdb_spark.datamodel import local_df
-
-    g, name = adj_graph, "t_adj_presum"
-    try:
-        g.ensure_bucketed_layout(name, buckets=4)
-        n0 = g.get(Q.edges().count())[-1].count
-        base_files = _dir_state(spark, f"{name}_e_out")
-        # simulate an r10-early sidecar: strip the sum term
-        mp = P.layout_meta_path(spark, name)
-        with open(mp) as fh:
-            meta = json.load(fh)
-        for k in ("v", "e"):
-            meta[k].pop("s", None)
-        with open(mp, "w") as fh:
-            json.dump(meta, fh)
-        g = g.append_state(edges=local_df(
-            spark, [("c_0", "PLACED", "o_presum_x", {})], _E_SCHEMA))
-        assert g.get(Q.edges().count())[-1].count == n0 + 1
-        assert g._layout_name is None  # divorced, not half-appended
-        assert _dir_state(spark, f"{name}_e_out") == base_files
-    finally:
-        P.drop_adjacency(spark, name)
 
 
 def test_gc_stale_stages_age_gated(spark, adj_graph):
@@ -979,49 +867,5 @@ def test_ensure_different_buckets_rewrites(spark, adj_graph):
         assert meta and meta.get("buckets") == 8, meta
         files = _dir_state(spark, f"{name}_e_out")
         assert files, "rewritten layout must have files"
-    finally:
-        P.drop_adjacency(spark, name)
-
-
-def test_append_failure_rolls_back_files(spark, adj_graph, monkeypatch):
-    """The three layout appends are not one transaction: a failure
-    after the vertex append but before the edge appends must roll the
-    table dirs back to the pre-append file set (a half-appended delta
-    would diverge the forward/reversed copies, and the next REINDEX —
-    sourced from these very tables — would launder the phantom rows
-    into canonical state). append_state then divorces via plain
-    union, so the session still sees the delta exactly once."""
-    from graphdb_spark import partitioning as P
-    from graphdb_spark.algebra import Q
-    from graphdb_spark.datamodel import local_df
-
-    g, name = adj_graph, "t_adj_rollback"
-    try:
-        g.ensure_bucketed_layout(name, buckets=4)
-        nv0 = g.get(Q.vertices().count())[-1].count
-        ne0 = g.get(Q.edges().count())[-1].count
-        states = {t: _dir_state(spark, f"{name}{t}")
-                  for t in ("_v", "_e_out", "_e_in")}
-        real_fp = P.content_fingerprint
-        calls = {"n": 0}
-
-        def flaky_fp(df):
-            calls["n"] += 1
-            if calls["n"] == 2:  # vertices fp ok, edges fp raises
-                raise RuntimeError("simulated failure mid-append")
-            return real_fp(df)
-
-        monkeypatch.setattr(P, "content_fingerprint", flaky_fp)
-        dv = local_df(spark, [("v_rb_1", "order", {})], _V_SCHEMA)
-        de = local_df(spark, [("c_0", "PLACED", "v_rb_1", {})], _E_SCHEMA)
-        g = g.append_state(vertices=dv, edges=de)
-        monkeypatch.setattr(P, "content_fingerprint", real_fp)
-        # session sees the delta exactly once, via the divorce
-        assert g.get(Q.vertices().count())[-1].count == nv0 + 1
-        assert g.get(Q.edges().count())[-1].count == ne0 + 1
-        assert g._layout_name is None
-        # every table dir rolled back to the pre-append file set
-        for t in ("_v", "_e_out", "_e_in"):
-            assert _dir_state(spark, f"{name}{t}") == states[t], t
     finally:
         P.drop_adjacency(spark, name)

@@ -92,6 +92,37 @@ def test_missing_query_field_is_400(server):
     assert code == 400
 
 
+@pytest.mark.parametrize("payload", [
+    [],
+    {"query": None},
+    {"query": "MATCH (c:customer) RETURN c.name AS name", "limit": "ten"},
+    {"query": "MATCH (c:customer) RETURN c.name AS name", "limit": -1},
+], ids=["array_body", "null_query", "non_integer_limit", "negative_limit"])
+def test_malformed_envelope_is_400_before_planning(server, payload):
+    """A body that is not an object, a non-string query or a limit that
+    is not a non-negative integer is refused as an invalid request,
+    with a status, before the query is planned."""
+    code, body = _post(server.url + "/api/v1/query", payload)
+    assert (code, body["status"]) == (400, "error")
+    assert body["message"].startswith("invalid request")
+
+
+def test_negative_content_length_is_400(server):
+    """A negative Content-Length is refused, not read as 'until the
+    client hangs up' (the client waits for the answer, so neither side
+    would ever finish)."""
+    import socket
+    from urllib.parse import urlsplit
+
+    url = urlsplit(server.url)
+    with socket.create_connection((url.hostname, url.port),
+                                  timeout=30) as s:
+        s.sendall(b"POST /api/v1/query HTTP/1.1\r\nHost: x\r\n"
+                  b"Content-Length: -1\r\n\r\n{}")
+        status = s.recv(64).split(b"\r\n", 1)[0]
+    assert status.split()[1] == b"400", status
+
+
 def test_unknown_route_404(server):
     code, _ = _get(server.url + "/api/v1/nope")
     assert code == 404

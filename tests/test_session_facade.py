@@ -100,3 +100,58 @@ def test_cypher_plan_cache_is_lru_not_fifo(spark):
         assert q2 not in g._cypher_plan_cache
     finally:
         GraphSession.CYPHER_PLAN_CACHE_MAX = old_max
+
+
+@pytest.mark.parametrize("phys_gib, heap", [
+    (2, "1024m"), (15, "7680m"), (32, "16384m"), (256, "16384m"),
+])
+def test_default_driver_memory_is_half_of_ram_capped(phys_gib, heap):
+    from graphdb_spark.session import default_driver_memory
+
+    assert default_driver_memory(phys_gib << 30) == heap
+
+
+def test_build_spark_sizes_heap_from_ram_unless_pinned(monkeypatch):
+    """build_spark derives the driver heap from physical memory; the
+    SPARK_GRAFT_DRIVER_MEM deployment setting still overrides it. A
+    recording builder stands in for Spark, so no JVM starts."""
+    import os
+    import types
+
+    from pyspark.sql import SparkSession
+
+    from graphdb_spark import session as S
+
+    class Builder:
+        def __init__(self):
+            self.conf = {}
+
+        def appName(self, _name):  # noqa: N802 (PySpark naming)
+            return self
+
+        def master(self, _master):
+            return self
+
+        def config(self, key, value):
+            self.conf[key] = value
+            return self
+
+        def getOrCreate(self):  # noqa: N802
+            return types.SimpleNamespace(
+                conf=types.SimpleNamespace(set=lambda *_: None),
+                sparkContext=types.SimpleNamespace(defaultParallelism=4),
+            )
+
+    def heap(**env):
+        b = Builder()
+        monkeypatch.setattr(SparkSession, "builder", b)
+        for k, v in env.items():
+            monkeypatch.setenv(k, v)
+        S.build_spark("t", master="local[1]")
+        return b.conf["spark.driver.memory"]
+
+    pages = {"SC_PHYS_PAGES": (12 << 30) // 4096, "SC_PAGE_SIZE": 4096}
+    monkeypatch.setattr(os, "sysconf", pages.__getitem__)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert heap() == "6144m"
+    assert heap(SPARK_GRAFT_DRIVER_MEM="3g") == "3g"

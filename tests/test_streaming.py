@@ -427,11 +427,12 @@ def test_stream_incremental_dedup_batch_semantics(spark):
 
 
 def test_fold_appends_batch_layout_maintained(spark):
-    """Insert-only fold through the layout-maintaining append path:
-    an adopted session-owned layout SURVIVES each micro-batch (no
-    divorce, no REINDEX), the appended rows are served, endpoint
-    validation drops dangling edges, in-batch duplicates collapse,
-    and a batch carrying deletes raises loudly."""
+    """Insert-only fold: the appended rows are served, endpoint
+    validation drops dangling edges, in-batch duplicates collapse, and
+    a batch carrying deletes raises loudly. The write divorces an
+    adopted layout without touching its tables, and a later ensure
+    re-indexes them to the folded state; an empty micro-batch is no
+    swap at all and keeps the layout adopted."""
     import pytest as _pytest
 
     from graphdb_spark import partitioning as P
@@ -462,13 +463,20 @@ def test_fold_appends_batch_layout_maintained(spark):
             # dangling edge: 'z' exists nowhere -> dropped
             (None, "edge", "upsert", None, None, "a", "L", "z", {}),
         ]))
-        # layout maintained WITH the write — still adopted
+        # divorced like any graph swap; the tables still hold the
+        # pre-fold rows
+        assert g._layout_name is None and not g._e_by_key
+        assert g.vertex_count() == 3 and g.edge_count() == 2
+        meta = P.read_layout_meta(spark, name)
+        assert meta["v"]["n"] == 2 and meta["e"]["n"] == 1
+        # a later ensure re-indexes both relations to the folded state
+        g.ensure_bucketed_layout(name, buckets=4)
         assert g._layout_name == name and g._e_by_key
         assert g.vertex_count() == 3 and g.edge_count() == 2
-        # the layout sidecar folded the delta forward (appends counted)
         meta = P.read_layout_meta(spark, name)
-        assert P.append_pressure(meta) == {"v": 1, "e": 1}
         assert meta["v"]["n"] == 3 and meta["e"]["n"] == 2
+        fold_appends(g, _mk_changes(spark, []))
+        assert g._layout_name == name
         # deletes are a contract violation, not a silent append
         with _pytest.raises(ValueError, match="insert-only"):
             fold_appends(g, _mk_changes(spark, [
@@ -482,7 +490,8 @@ def test_fold_appends_batch_layout_maintained(spark):
 def test_apply_append_stream_matches_batch(spark, tmp_path):
     """True streaming run of the append path: two disjoint insert
     micro-batches drained with availableNow; final state equals the
-    one-shot batch fold, and the layout is still adopted afterwards."""
+    one-shot batch fold. The folds divorce the adopted layout, and a
+    later ensure serves the same rows from re-indexed tables."""
     from graphdb_spark import partitioning as P
     from graphdb_spark.datamodel import local_df
     from graphdb_spark.session import GraphSession
@@ -520,21 +529,20 @@ def test_apply_append_stream_matches_batch(spark, tmp_path):
             checkpoint_dir=str(tmp_path / "ckpt"),
         )
         q.awaitTermination(120)
+        assert g._layout_name is None and not g._e_by_key
+        assert g.vertex_count() == 3 and g.edge_count() == 2
+
+        def edges():
+            return sorted(
+                (r["src"], r["relationship"], r["dst"])
+                for r in g.edges.collect()
+            )
+
+        assert edges() == [("a", "L", "b"), ("b", "L", "c")]
+        g.ensure_bucketed_layout(name, buckets=4)
         assert g._layout_name == name and g._e_by_key
-        assert g.vertex_count() == 3 and g.edge_count() == 2
-        edges = sorted(
-            (r["src"], r["relationship"], r["dst"])
-            for r in g.edges.collect()
-        )
-        assert edges == [("a", "L", "b"), ("b", "L", "c")]
-        # compaction restores one-file-per-bucket on the appended
-        # relations and clears their pressure (a both-relation compact
-        # routes through the full REINDEX, whose fresh sidecar omits
-        # the appends key — normalized to zero)
-        g.compact_layout()
-        meta = P.read_layout_meta(spark, name)
-        assert not any(P.append_pressure(meta).values())
-        assert g.vertex_count() == 3 and g.edge_count() == 2
+        assert g.vertex_count() == 3 and edges() == [
+            ("a", "L", "b"), ("b", "L", "c")]
     finally:
         P.drop_adjacency(spark, name)
 
