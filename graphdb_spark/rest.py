@@ -15,9 +15,10 @@ driver-embedded facade needs nothing more. The server answers from the
 Spark *driver* — the query itself still executes distributed; only the
 final ``limit``-bounded collect crosses to HTTP. Row limits are
 enforced with ``df.limit(n)`` BEFORE collecting, never an unbounded
-pull; the limited frame is prepared once per plan-cached read
-(:func:`graphdb_spark.session.bounded`), so a repeated read reuses its
-physical plan and stages and runs as one Spark job.
+pull. A read the session's plan cache accepted answers the same rows
+every time, so its collected rows are kept with its cache entry (one
+limit, at most ``DEFAULT_ROW_LIMIT`` rows): a repeated read is served
+from them without a Spark job, and a write drops them with the cache.
 
 Statements that return no rows answer 200 with an empty result:
 mutations add their summary (``"summary"``: created/deleted counts),
@@ -39,7 +40,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pyspark.sql import DataFrame
 
 from graphdb_spark import __version__ as _pkg_version
-from graphdb_spark.session import bounded
+from graphdb_spark.session import KEPT_ROWS
 
 DEFAULT_ROW_LIMIT = 1000
 
@@ -62,13 +63,22 @@ def _detect_language(q: str) -> str:
 
 
 def _df_payload(df, limit: int):
-    rows = bounded(df, limit).collect()
-    cols = df.columns
-    return cols, [
+    """``(columns, rows)`` of ``df.limit(limit)``. A plan-cached frame
+    keeps its payload for one limit when it has at most
+    ``DEFAULT_ROW_LIMIT`` rows, and a repeat of that limit is served
+    from it: no Spark job, no py4j call."""
+    kept = df.__dict__.get(KEPT_ROWS)
+    if kept and kept[0] == limit:
+        return kept[1]
+    rows = df.limit(limit).collect()
+    payload = df.columns, [
         [None if v is None else (v if isinstance(v, (int, float, bool, str))
                                  else str(v)) for v in row]
         for row in (tuple(r) for r in rows)
     ]
+    if kept is not None and len(rows) <= DEFAULT_ROW_LIMIT:
+        df.__dict__[KEPT_ROWS] = (limit, payload)
+    return payload
 
 
 def _envelope(payload) -> tuple[str, int]:
@@ -99,8 +109,11 @@ class _Handler(BaseHTTPRequestHandler):
         self.send_response(code)
         self.send_header("Content-Type", "application/json")
         self.send_header("Content-Length", str(len(body)))
-        self.end_headers()
-        self.wfile.write(body)
+        try:
+            self.end_headers()  # writes the buffered status and headers
+            self.wfile.write(body)
+        except (BrokenPipeError, ConnectionResetError):
+            pass  # the client hung up: nobody is left to answer
 
     def do_GET(self):  # noqa: N802 (stdlib naming)
         if self.path == "/api/v1/health":

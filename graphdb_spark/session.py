@@ -127,6 +127,10 @@ _GRAPH_VIEWS = ("vertices", "edges")
 #: leaves a cacheable SQL read may reach outside the graph views:
 #: inline rows only (``SELECT 1``, ``VALUES``, a CTE reference)
 _INLINE_LEAVES = ("OneRowRelation", "LocalRelation", "CTERelationRef")
+#: attribute of a plan-cached frame where its rows are kept: set to
+#: ``()`` when ``GraphSession._cached_read`` accepts the frame, filled
+#: by ``rest._df_payload``. It lives and dies with the cache entry
+KEPT_ROWS = "_graphdb_rows"
 
 
 @functools.cache
@@ -187,30 +191,6 @@ def serialized(mutation):
             return mutation(g, *args, **kwargs)
 
     return run
-
-
-def bounded(df: DataFrame, n: int) -> DataFrame:
-    """``df.limit(n)``, prepared once per frame for its latest limit.
-
-    A fresh ``limit`` wrapper is a new query: Spark re-plans it and
-    re-runs every shuffle and broadcast stage below it. Collecting the
-    SAME limited frame again reuses its physical plan (AQE's final plan
-    included) and the stages already materialized, so a repeated read
-    of a plan-cached frame is a single result job. The prepared frame
-    lives on the frame, so it is dropped with the frame's plan-cache
-    entry.
-
-    Retention: an executed prepared frame pins its broadcast relations
-    on the driver heap and its shuffle files on local disk. One limit
-    is kept per frame, so at most ``CYPHER_PLAN_CACHE_MAX`` (128)
-    executed plans are pinned per session; each broadcast side is
-    capped by ``spark.sql.autoBroadcastJoinThreshold`` (64 MB, see
-    :func:`build_spark`) or, for hinted broadcasts, by the Cypher
-    executor's ``BROADCAST_NODE_MAX`` (250k rows)."""
-    prepared = df.__dict__.get("_graphdb_bounded")
-    if prepared is None or prepared[0] != n:
-        prepared = df.__dict__["_graphdb_bounded"] = (n, df.limit(n))
-    return prepared[1]
 
 
 class GraphSession:
@@ -768,8 +748,9 @@ class GraphSession:
         CACHED per query text on this immutable state — the standard
         engine plan cache: a repeated MATCH…RETURN skips tokenize/
         parse/bind entirely and goes straight to execution, and
-        :func:`bounded` keeps its row-limited frame with it, so the
-        physical plan and materialized stages are reused too.
+        ``rest._df_payload`` keeps its collected rows on the cached
+        frame (:data:`KEPT_ROWS`), so a repeated REST read runs no
+        Spark job at all.
         Mutations and KV ops are never cached (they have side effects
         and return summaries); writes run under the session's write
         lock, and set_state drops the cache wholesale, so a cached plan
@@ -791,7 +772,9 @@ class GraphSession:
         """LRU lookup of a read plan; on a miss, ``plan()`` and cache
         the result when it is a DataFrame that ``replayable`` accepts —
         into the cache taken BEFORE planning, so a read planned before
-        or during a swap lands in the memo the swap discards."""
+        or during a swap lands in the memo the swap discards. Only an
+        accepted frame gets a :data:`KEPT_ROWS` slot: its rows are the
+        same every time it is collected, so they may be kept."""
         with self._cache_lock:
             cache = self._cypher_plan_cache
             hit = cache.pop(key, None)
@@ -809,6 +792,7 @@ class GraphSession:
                 if len(cache) >= self.CYPHER_PLAN_CACHE_MAX:
                     # drop the oldest entry (dict keeps insert order)
                     cache.pop(next(iter(cache)))
+                out.__dict__[KEPT_ROWS] = ()
                 cache[key] = out
         return out
 

@@ -128,7 +128,10 @@ def pack(specs):
         ]
         return reduce(DataFrame.unionAll, parts)
 
-    ctes = ",\n".join(f"{tag}_base AS (\n{sql}\n)" for tag, _f, sql, _c in specs)
+    # MATERIALIZED: melt_sql reads each base once per value column,
+    # and DuckDB re-evaluates an inlined CTE at every reference
+    ctes = ",\n".join(f"{tag}_base AS MATERIALIZED (\n{sql}\n)"
+                       for tag, _f, sql, _c in specs)
     body = "\nUNION ALL\n".join(
         melt_sql(tag, f"{tag}_base", cols) for tag, _f, _sql, cols in specs
     )

@@ -1,18 +1,18 @@
-"""Serving path: prepared (row-limited, plan-cached) reads, the
+"""Serving path: plan-cached reads served from their kept rows, the
 core-sized resident graph cache, the one-pass bounded collect, and
 serialized writes under concurrent callers."""
 
 from __future__ import annotations
 
 import threading
+import time
 import uuid
 
 import pytest
 
 from graphdb_spark.rest import _df_payload
-from graphdb_spark.session import GraphSession, bounded
+from graphdb_spark.session import GraphSession
 
-ONE_HOP = "MATCH (c:customer {id: 'c_1'})-[:PLACED]->(o) RETURN count(o) AS n"
 LOOKUP = "MATCH (c:customer {id: 'c_7'}) RETURN c.id, c.mktsegment"
 
 
@@ -28,6 +28,36 @@ def _jobs(spark, fn):
     # the status store is fed by the listener bus: drain it first
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _ungrouped_jobs(spark, fn):
+    """(fn(), number of Spark jobs run in no job group meanwhile): the
+    REST server's handler threads run theirs in none."""
+    sc = spark.sparkContext
+    bus, tracker = sc._jsc.sc().listenerBus(), sc.statusTracker()
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup(None))
+    out = fn()
+    bus.waitUntilEmpty()
+    return out, len(set(tracker.getJobIdsForGroup(None)) - before)
+
+
+def _py4j_calls(monkeypatch, fn):
+    """(fn(), py4j round trips this thread made in it)."""
+    from py4j.clientserver import ClientServerConnection
+
+    send, calls, me = ClientServerConnection.send_command, [0], \
+        threading.get_ident()
+
+    def counting(conn, command):
+        if threading.get_ident() == me:
+            calls[0] += 1
+        return send(conn, command)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", counting)
+        out = fn()
+    return out, calls[0]
 
 
 @pytest.fixture(scope="module")
@@ -50,21 +80,84 @@ def _small(spark):
     )
 
 
-def test_repeated_cached_one_hop_read_is_one_job(spark, resident):
-    first = _df_payload(resident.execute(ONE_HOP), 1000)
-    df = resident.execute(ONE_HOP)
-    again, jobs = _jobs(spark, lambda: _df_payload(df, 1000))
-    assert again == first and first[1][0][0] > 0
-    assert jobs <= 1
+@pytest.mark.parametrize("query, steps", [
+    # a repeat of a cached 1-hop read is served from its kept rows
+    pytest.param("MATCH (c:customer {id: 'c_1'})-[:PLACED]->(o) "
+                 "RETURN count(o) AS kept_n",
+                 [(1000, False), (1000, True)], id="repeat"),
+    # a new limit re-collects, and its rows replace the kept ones
+    pytest.param("MATCH (c:customer) RETURN c.id AS kept_c ORDER BY kept_c",
+                 [(1000, False), (5, False), (5, True), (1000, False)],
+                 id="new_limit"),
+    # more than DEFAULT_ROW_LIMIT rows (of 1850 vertices) are not kept
+    pytest.param("MATCH (n) RETURN n.id AS kept_id ORDER BY kept_id",
+                 [(1500, False), (1500, False), (1000, False), (1000, True)],
+                 id="over_limit"),
+])
+def test_repeated_read_is_served_from_kept_rows(spark, resident, monkeypatch,
+                                                query, steps):
+    df = resident.execute(query)
+    total = df.count()
+    for limit, served in steps:
+        want = df.columns, [list(r) for r in df.limit(limit).collect()]
+        (got, calls), jobs = _jobs(spark, lambda: _py4j_calls(
+            monkeypatch, lambda: _df_payload(resident.execute(query), limit)))
+        assert got == want and len(got[1]) == min(limit, total)
+        if served:  # no Spark job, no py4j call
+            assert (jobs, calls) == (0, 0)
+        else:
+            assert jobs >= 1
 
 
-def test_bounded_frame_is_prepared_once_per_limit(resident):
-    df = resident.execute(LOOKUP)
-    assert bounded(df, 10) is bounded(df, 10)
-    ten = bounded(df, 10)
-    assert bounded(df, 11) is not ten
-    # one prepared limit per frame: the older one is let go
-    assert bounded(df, 10) is not ten
+def test_clock_read_is_never_served_from_kept_rows(spark, resident):
+    df = resident.execute(
+        "MATCH (c:customer {id: 'c_7'}) RETURN timestamp() AS kept_t")
+    first = _df_payload(df, 10)[1][0][0]
+    time.sleep(0.01)
+    (_, rows), jobs = _jobs(spark, lambda: _df_payload(df, 10))
+    assert jobs >= 1 and rows[0][0] > first
+
+
+def test_rest_write_drops_kept_rows(spark):
+    import json
+    import urllib.request
+
+    from graphdb_spark.rest import QueryServer
+
+    def post(query):
+        req = urllib.request.Request(
+            srv.url + "/api/v1/query", method="POST",
+            data=json.dumps({"query": query}).encode())
+        with urllib.request.urlopen(req, timeout=120) as r:
+            return json.loads(r.read())["results"]
+
+    read = "MATCH (n:N) RETURN count(n) AS cnt"
+    srv = QueryServer(_small(spark)).start()
+    try:
+        assert post(read) == [[1]]
+        assert _ungrouped_jobs(spark, lambda: post(read)) == ([[1]], 0)
+        post("CREATE (:N {id: 'b'})")
+        assert post(read) == [[2]]
+        assert _ungrouped_jobs(spark, lambda: post(read)) == ([[2]], 0)
+    finally:
+        srv.stop()
+
+
+def test_rows_kept_before_a_swap_are_not_served_after_it(spark):
+    from graphdb_spark.operators import mutations as M
+
+    g = _small(spark)
+    q = "MATCH (n:N) RETURN n.id AS id ORDER BY id"
+    old = g.execute(q)
+    assert _df_payload(old, 10)[1] == [["a"]]
+    M.create_vertex(g, "b", "N")
+    # a reader still holding the old frame collects it after the swap
+    assert _df_payload(old, 10)[1] == [["a"]]
+    new = g.execute(q)
+    assert new is not old
+    assert _df_payload(new, 10)[1] == [["a"], ["b"]]
+    (_, rows), jobs = _jobs(spark, lambda: _df_payload(g.execute(q), 10))
+    assert (rows, jobs) == ([["a"], ["b"]], 0)
 
 
 def test_bounded_lookup_on_resident_vertices_is_one_job(spark, resident):
@@ -74,6 +167,28 @@ def test_bounded_lookup_on_resident_vertices_is_one_job(spark, resident):
     rows, jobs = _jobs(spark, lambda: df.limit(1000).collect())
     assert jobs == 1
     assert rows == df.collect() and len(rows) == 1
+
+
+def test_point_lookup_carries_no_broadcast_hint(resident):
+    # a hint on a node side that joins nothing makes Spark warn on
+    # every plan-cache miss ("A join hint (strategy=broadcast) is
+    # specified but it is not part of a join relation")
+    plan = resident.cypher(LOOKUP)._jdf.queryExecution().analyzed()
+    assert "ResolvedHint" not in plan.toString()
+
+
+def test_one_hop_count_broadcasts_its_start_node(spark, resident):
+    # size-based broadcasts off: at this scale they would hide the hint
+    key, conf = "spark.sql.autoBroadcastJoinThreshold", spark.conf
+    threshold = conf.get(key)
+    conf.set(key, "-1")
+    try:
+        df = resident.cypher("MATCH (c:customer {id: 'c_9'})-[:PLACED]->(o)"
+                             " RETURN count(o) AS hint_n")
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        conf.set(key, threshold)
+    assert "BroadcastHashJoin" in plan and "BuildLeft" in plan
 
 
 def test_plain_graph_cache_is_core_sized(spark, resident):

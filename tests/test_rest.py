@@ -123,6 +123,33 @@ def test_negative_content_length_is_400(server):
     assert status.split()[1] == b"400", status
 
 
+@pytest.mark.parametrize("error", [BrokenPipeError, ConnectionResetError])
+def test_answer_to_a_client_that_hung_up_is_dropped(server, monkeypatch,
+                                                    error):
+    """A client that hung up before its answer (a client-side timeout
+    on a slow query) costs the server nothing: the failed write is
+    dropped, not passed to socketserver's handle_error, which prints a
+    traceback per request."""
+    import socket
+    import socketserver
+    from urllib.parse import urlsplit
+
+    def hung_up(_writer, _data):
+        raise error()
+
+    reached = []
+    monkeypatch.setattr(socketserver._SocketWriter, "write", hung_up)
+    monkeypatch.setattr(server._httpd, "handle_error",
+                        lambda *args: reached.append(args))
+    url = urlsplit(server.url)
+    with socket.create_connection((url.hostname, url.port),
+                                  timeout=30) as s:
+        s.sendall(b"GET /api/v1/health HTTP/1.1\r\nHost: x\r\n\r\n")
+        # the server closes the connection only after handle_error
+        assert s.recv(64) == b""
+    assert reached == []
+
+
 def test_unknown_route_404(server):
     code, _ = _get(server.url + "/api/v1/nope")
     assert code == 404
