@@ -293,8 +293,8 @@ class _Executor:
 
     def _g_edges(self, key: str | None = None) -> DataFrame:
         """Edge frame for a hop joining on ``key`` ('src'/'dst'): the
-        copy bucketed on that key when the session adopted the dual
-        adjacency layout (session.use_bucketed_layout — the Spark twin
+        copy partitioned on that key when the session adopted the dual
+        adjacency layout (session.use_adjacency_layout — the Spark twin
         of the reference's forward/reversed edge indexes), else the
         canonical frame. Same rows either way."""
         return self.g._e_by_key.get(key, self.g.edges)
@@ -311,7 +311,7 @@ class _Executor:
     def _hop_edges(self, rel: P.RelPattern,
                    direction: str) -> tuple[DataFrame, DataFrame | None]:
         """(edges, edges_in) for a var-length/path hop: each
-        orientation half reads its own-key bucketed copy when adopted.
+        orientation half reads its own-key partitioned copy when adopted.
         Keeps the historical gate (pre-filter only when rel.types) so
         semantics are unchanged without a layout."""
         key = "dst" if direction == "in" else "src"
@@ -471,7 +471,7 @@ class _Executor:
             evar = rel.var or self._fresh("_e")
             evars.append(evar)
             # fixed hop joins on src (outgoing) / dst (incoming): read
-            # the copy bucketed on that key when a layout is adopted;
+            # the copy partitioned on that key when a layout is adopted;
             # an undirected hop's flipped half joins on the original
             # dst, so it reads the reversed copy
             e = self._edge_base(rel, "dst" if rel.incoming else "src")

@@ -102,11 +102,10 @@ def _edges_step(edges: DataFrame, t: str | None, direction: str,
     """(from, to) pairs for one hop. direction: out | in | both.
 
     ``edges_in``: same rows as ``edges`` but stored dst-keyed (the
-    reversed copy of partitioning.write_adjacency). When a bucketed
-    layout is adopted, callers pass the dst copy so the ``in``
-    orientation reads the table bucket-sorted on its own hop key —
-    frontier `IN (...)` pushdown then prunes sorted row groups and
-    non-broadcast hops skip the edge-side exchange. Caller contract:
+    reversed copy of partitioning.write_adjacency). When the layout
+    is adopted, callers pass the dst copy so the ``in`` orientation
+    reads the copy partitioned and sorted on its own hop key —
+    non-broadcast hops then skip the edge-side exchange. Caller contract:
     edges_in must hold the SAME edge rows (it is the same relation,
     different physical order); absent, both halves read ``edges``."""
     rev = edges_in if edges_in is not None else edges

@@ -7,9 +7,11 @@ The reference never faces these problems (single-node KV); on a
   too skewed even for AQE's skew-join splitting (a hot vertex with
   10^8 edges). The small side is replicated salt-ways; the big side
   gets a random-but-deterministic salt per row.
-- ``write_bucketed`` / ``read_bucketed``: co-located joins via bucket
-  tables — repeated joins on the same key (the edges table joined on
-  src every traversal) skip their shuffle entirely.
+- ``write_bucketed``: co-located joins via bucket tables — repeated
+  joins on the same key between tables bucketed the same way skip
+  their shuffle entirely.
+- ``write_adjacency``: the same co-location for the resident graph,
+  held in Spark's cache — vertices on id, edges on src and on dst.
 - ``degree_stats`` / ``hot_keys``: measure graph skew so the caller
   can pick salting factors from data, not guesswork.
 - ``repartition_by_key``: hash-distribute with a sane partition count
@@ -91,310 +93,37 @@ def write_bucketed(df: DataFrame, table: str, key: str, buckets: int = 32,
     w.saveAsTable(table)
 
 
-def read_bucketed(spark, table: str) -> DataFrame:
-    return spark.table(table)
-
-
-def write_adjacency(vertices: DataFrame, edges: DataFrame, name: str,
-                    buckets: int = 32, fp_v: dict | None = None,
-                    fp_e: dict | None = None) -> dict:
-    """Dual bucketed adjacency layout — the Spark twin of the
+def write_adjacency(vertices: DataFrame, edges: DataFrame
+                    ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Dual in-memory adjacency layout — the Spark twin of the
     reference's forward + reversed edge indexes
-    (lib/src/rdb/managers.rs:233-240: EdgeRangeManager bucketed by
+    (lib/src/rdb/managers.rs:233-240: EdgeRangeManager keyed by
     outbound id, EdgeRangeManager::new_reversed by inbound id) and its
     id-keyed vertex store.
 
-    Three bucketed, bucket-sorted tables:
+    Returns ``(v, e_out, e_in)``: vertices on ``id``, edges on ``src``
+    (forward) and edges on ``dst`` (reversed), each hash-partitioned
+    into ``defaultParallelism`` partitions on its key, sorted within
+    each partition on it, and cached. The cached relation reports
+    that partitioning and order, so a non-broadcast hop ``edges ⋈
+    frontier`` on src (OUT) or dst (IN) shuffles only the frontier,
+    with no exchange or sort on the edge side, and ``groupBy(src)``
+    plans no exchange at query time — the co-partitioning an
+    iterative join relies on to move only its small side. Keeping
+    edges twice doubles their cache, the same trade the reference
+    makes with its two edge-range column families.
 
-    - ``{name}_v``      vertices bucketed+sorted by ``id``
-    - ``{name}_e_out``  edges bucketed+sorted by ``src`` (forward)
-    - ``{name}_e_in``   edges bucketed+sorted by ``dst`` (reversed)
-
-    What this buys at scale: a traversal hop is ``edges ⋈ frontier``
-    on src (OUT) or dst (IN). Over plain parquet a non-broadcast hop
-    exchanges BOTH sides; over this layout the edge relation's scan
-    already satisfies the join's required distribution, so only the
-    frontier (ids, one column) moves — exchanges per hop drop 2→1 and
-    the multi-TB side never reshuffles. ``groupBy(src)`` degree
-    aggregates likewise plan with no exchange at all. The write cost
-    is paid once; break-even is a handful of joins (measured 3.4 at
-    sf10, BENCH_sf10_bucketed.json).
-
-    Each table is repartitioned to exactly ``buckets`` partitions on
-    its bucket key before the write so every bucket is ONE file —
-    required for the scan to report the sortBy order (multi-file
-    buckets force a per-partition re-sort) and for one-task-per-bucket
-    reads. Storing edges twice doubles storage — the same trade the
-    reference makes with its two edge-range column families.
-    """
-    specs = {
-        f"{name}_v": (vertices, "id"),
-        f"{name}_e_out": (edges, "src"),
-        f"{name}_e_in": (edges, "dst"),
-    }
-    for table, (df, key) in specs.items():
-        write_adjacency_table(df, table, key, buckets)
-    # stamp the bucket count + content fingerprints next to the files:
-    # attach_adjacency refuses to re-register without a matching spec
-    # (a declared-but-wrong bucket count would make the planner elide
-    # exchanges that ARE needed → silently dropped join matches), and
-    # ensure_bucketed_layout compares the fingerprints against the
-    # session's frames (row counts alone miss count-preserving
-    # mutations — VERDICT r9 item 1). Callers that already HOLD the
-    # frames' fingerprints (a REINDEX whose ensure just computed them
-    # for the staleness compare) pass them through; recomputing would
-    # be one full scan per relation of pure waste at 100 TB.
-    write_layout_meta(
-        vertices.sparkSession,
-        name,
-        {
-            "buckets": buckets,
-            "v": fp_v or content_fingerprint(vertices),
-            "e": fp_e or content_fingerprint(edges),
-        },
+    The caches are filled here, not at first use: until a cached
+    relation is filled the planner does not know its partitioning,
+    so a query planned before then would shuffle both join sides."""
+    n = vertices.sparkSession.sparkContext.defaultParallelism
+    frames = tuple(
+        df.repartition(n, key).sortWithinPartitions(key).cache()
+        for df, key in ((vertices, "id"), (edges, "src"), (edges, "dst"))
     )
-    return {t: k for t, (_, k) in specs.items()}
-
-
-#: sidecar written into the {name}_v table directory at layout-write
-#: time. Underscore-prefixed, so Spark's FileIndex ignores it when
-#: scanning the parquet files; it travels with the files across
-#: catalog loss / dir copies, which is exactly the lifetime the guard
-#: needs (the catalog forgets, the files and their meta survive).
-LAYOUT_META_FILE = "_layout_meta.json"
-
-
-def content_fingerprint(df: DataFrame) -> dict:
-    """Order-independent content fingerprint of a frame: row count +
-    bit-XOR of per-row xxhash64 over EVERY column + the exact integer
-    SUM of the same hashes. This is the layout stale-guard (VERDICT
-    r9 item 1): row counts alone cannot see a count-preserving
-    mutation (set_properties / update_vertex upsert values without
-    changing cardinality), so attaching layout tables on a count
-    match could silently serve pre-mutation data. XOR and SUM are
-    both commutative, so the fingerprint is independent of
-    partitioning and row order. The SUM term exists because XOR alone
-    has a structural collision class: any PAIR of identical rows cancels
-    (h ^ h = 0), so e.g. {A, A, B} and {B, C, C} share count AND
-    XOR while holding different content; their hash sums differ
-    unless the colliding rows hash equal. SUM is computed in
-    DECIMAL(38,0) (exact; a bigint sum would hit ANSI overflow at
-    scale) and carried as a string in the JSON sidecar. Map columns
-    are normalized to sorted-entry JSON because Spark (correctly)
-    refuses hash() over MapType and raw map json is
-    entry-order-sensitive. One scan + a 1-row aggregate — the same
-    cost class as the count() guard it replaces, strictly more
-    information."""
-    from pyspark.sql.types import MapType
-
-    cols = []
-    for f in df.schema.fields:
-        c = F.col(f.name)
-        if isinstance(f.dataType, MapType):
-            c = F.to_json(F.array_sort(F.map_entries(c)))
-        cols.append(c)
-    row = (
-        df.select(F.xxhash64(*cols).alias("h"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(h)").alias("x"),
-            F.sum(F.col("h").cast("decimal(38,0)")).alias("s"),
-        )
-        .collect()[0]
-    )
-    return {
-        "n": row["n"],
-        "x": int(row["x"]) if row["x"] is not None else 0,
-        "s": str(int(row["s"])) if row["s"] is not None else "0",
-    }
-
-
-def invalidate_layout_meta(spark, name: str):
-    """Remove the sidecar so the layout can NEVER attach until a fresh
-    spec is stamped — the guard rail around any multi-step swap whose
-    intermediate states must not be trusted (a partially swapped
-    generation behind a valid-looking sidecar would attach and serve
-    mixed tables)."""
-    import os
-
-    try:
-        os.remove(layout_meta_path(spark, name))
-    except OSError:
-        pass
-
-
-def layout_meta_path(spark, name: str) -> str:
-    import os
-
-    return os.path.join(
-        adjacency_table_location(spark, f"{name}_v"), LAYOUT_META_FILE
-    )
-
-
-def write_layout_meta(spark, name: str, meta: dict):
-    import json
-
-    with open(layout_meta_path(spark, name), "w") as fh:
-        json.dump(meta, fh)
-
-
-def read_layout_meta(spark, name: str) -> dict | None:
-    """The {buckets, v, e} spec write_adjacency stamped next to the
-    files, or None when absent (pre-meta layouts, partial writes) —
-    callers treat None as not-trustworthy and rewrite."""
-    import json
-    import os
-
-    p = layout_meta_path(spark, name)
-    if not os.path.isfile(p):
-        return None
-    try:
-        with open(p) as fh:
-            return json.load(fh)
-    except (OSError, ValueError):
-        return None
-
-
-def write_adjacency_table(df: DataFrame, table: str, key: str,
-                          buckets: int):
-    """One bucketed, bucket-sorted relation of the adjacency layout:
-    repartitioned to exactly ``buckets`` partitions on the bucket key
-    so every bucket is ONE file (one-task-per-bucket reads + the scan
-    reports the sortBy order).
-
-    autoBucketedScan is disabled for the write: when ``df`` itself
-    reads a bucketed table (a REINDEX reading the previous layout
-    generation), the planner elides the repartition against the
-    scan's claimed hash partitioning while the scan still packs files
-    by SIZE — tasks then hold mixed buckets and the rewrite emits
-    multi-file buckets (measured: 5 files for 4 buckets). A plain
-    file scan makes the repartition real and the output exactly one
-    file per non-empty bucket."""
-    spark = df.sparkSession
-    conf = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    old = spark.conf.get(conf)
-    spark.conf.set(conf, "false")
-    try:
-        (
-            df.repartition(buckets, F.col(key))
-            .write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(buckets, key)
-            .sortBy(key)
-            .saveAsTable(table)
-        )
-    finally:
-        spark.conf.set(conf, old)
-
-
-def adjacency_table_location(spark, table: str) -> str:
-    """Filesystem path a write_adjacency table lives at (warehouse
-    dir + table name — matching saveAsTable's managed-table layout)."""
-    import os
-    from urllib.parse import urlparse
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir"))
-    return os.path.join(wh.path or str(wh), table)
-
-
-def attach_adjacency(spark, name: str, buckets: int = 32) -> bool:
-    """Re-register ``write_adjacency`` tables from an EARLIER process
-    over their existing warehouse files. Spark's default in-memory
-    catalog forgets table metadata at process exit while the bucketed
-    parquet files survive; declaring an external table with the same
-    CLUSTERED BY / SORTED BY / bucket count over that location restores
-    the full bucketed-scan contract (verified: the re-attached scan
-    reports ``Bucketed: true`` and a groupBy on the bucket key plans
-    zero exchanges). Returns True when all three tables are available
-    (already in the catalog or re-registered), False when any file set
-    is missing — callers then fall back to writing.
-
-    The declared metadata is TRUSTED by the planner — registering
-    files written with a different bucket count would make bucketed
-    joins silently drop matches — so the declaration is verified
-    against the spec ``write_adjacency`` stamped next to the files
-    (``LAYOUT_META_FILE``): no meta, or meta with a different bucket
-    count, returns False and callers rewrite."""
-    import os
-
-    meta = read_layout_meta(spark, name)
-    if meta is None or meta.get("buckets") != buckets:
-        return False
-    specs = {f"{name}_v": "id", f"{name}_e_out": "src", f"{name}_e_in": "dst"}
-    for table, key in specs.items():
-        if spark.catalog.tableExists(table):
-            continue
-        loc = adjacency_table_location(spark, table)
-        if not os.path.isdir(loc) or not any(
-            f.endswith(".parquet") for f in os.listdir(loc)
-        ):
-            return False
-        sch = spark.read.parquet(loc).schema
-        cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in sch.fields
-        )
-        spark.sql(
-            f"CREATE TABLE `{table}` ({cols}) USING parquet "
-            f"CLUSTERED BY (`{key}`) SORTED BY (`{key}`) "
-            f"INTO {buckets} BUCKETS LOCATION '{loc}'"
-        )
-    return True
-
-
-def gc_stale_stages(spark, name: str, max_age_s: int = 3600):
-    """Remove abandoned staging generations of ``name`` (a crashed
-    REINDEX leaves its ``{name}__stage*`` tables behind). Age-gated:
-    a LIVE concurrent writer's staging dir is at most minutes old, so
-    only stages untouched for ``max_age_s`` are collected — deleting
-    a peer's in-flight stage would corrupt its swap."""
-    import glob
-    import os
-    import time
-
-    pattern = adjacency_table_location(spark, f"{name}__stage*")
-    now = time.time()
-    # age-gate on the NEWEST dir of each staging generation: a live
-    # REINDEX writes _v first and the (much larger) edge tables after,
-    # so the _v dir alone can look hours old while the writer is still
-    # mid-flight — collecting on per-dir age would gut it (the dirs
-    # share one prefix; only the whole generation going quiet for
-    # max_age_s means the writer is dead).
-    newest: dict[str, float] = {}
-    for loc in glob.glob(pattern):
-        try:
-            mt = os.path.getmtime(loc)
-        except OSError:
-            continue
-        base = os.path.basename(loc)
-        for sfx in ("_v", "_e_out", "_e_in"):
-            if base.endswith(sfx):
-                p = base[: -len(sfx)]
-                newest[p] = max(newest.get(p, 0.0), mt)
-    for p, mt in newest.items():
-        if now - mt >= max_age_s:
-            drop_adjacency(spark, p)
-
-
-def drop_adjacency(spark, name: str):
-    """Drop the three layout tables AND their files (DROP TABLE on an
-    externally re-attached table keeps files; a later overwrite-write
-    must start clean)."""
-    import shutil
-
-    for table in (f"{name}_v", f"{name}_e_out", f"{name}_e_in"):
-        loc = adjacency_table_location(spark, table)
-        spark.sql(f"DROP TABLE IF EXISTS `{table}`")
-        shutil.rmtree(loc, ignore_errors=True)
-
-
-def load_adjacency(spark, name: str) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(vertices, edges_by_src, edges_by_dst) from ``write_adjacency``
-    tables. The two edge frames hold identical rows; pick by join key."""
-    return (
-        spark.table(f"{name}_v"),
-        spark.table(f"{name}_e_out"),
-        spark.table(f"{name}_e_in"),
-    )
+    for df in frames:
+        df.count()
+    return frames
 
 
 def write_partitioned(df: DataFrame, path: str, *cols: str):
@@ -406,7 +135,3 @@ def write_partitioned(df: DataFrame, path: str, *cols: str):
     low-cardinality, always-filtered columns (date, event_type,
     source); never by high-cardinality keys (small-file explosion)."""
     df.write.mode("overwrite").partitionBy(*cols).parquet(path)
-
-
-def read_partitioned(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path)

@@ -23,7 +23,9 @@ from them without a Spark job, and a write drops them with the cache.
 Statements that return no rows answer 200 with an empty result:
 mutations add their summary (``"summary"``: created/deleted counts),
 as does GraphQL's parse-only detection result; a KV ``GET`` answers
-one ``value`` column.
+one ``value`` column. A query the engine refuses (syntax, unresolved
+names, unindexed properties) answers 400; any other failure is an
+engine fault and answers 500, in the same error envelope.
 
 Daemon management routes (daemon/start|stop|list, shutdown) are
 intentionally absent: they manage the reference's multi-process
@@ -37,12 +39,20 @@ import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 
 from graphdb_spark import __version__ as _pkg_version
 from graphdb_spark.session import KEPT_ROWS
 
 DEFAULT_ROW_LIMIT = 1000
+
+
+#: errors that answer 400: ValueError covers Cypher syntax and
+#: execution errors, LookupError an unindexed property in strict mode,
+#: AnalysisException (ParseException included) a SQL statement Spark
+#: cannot resolve
+_CLIENT_ERRORS = (ValueError, LookupError, AnalysisException)
 
 
 def _detect_language(q: str) -> str:
@@ -149,8 +159,12 @@ class _Handler(BaseHTTPRequestHandler):
                 cols, rows = [], []
             else:  # KV GET value
                 cols, rows = ["value"], [[out]]
-        except Exception as exc:  # noqa: BLE001 — surface as HTTP 400
-            self._json(400, {
+        except Exception as exc:  # noqa: BLE001 — every fault is answered
+            # the client's fault (a syntax or execution error in the
+            # query, an unindexed property, an unresolvable column) is
+            # a 400; anything else is the engine's and a 500
+            code = 400 if isinstance(exc, _CLIENT_ERRORS) else 500
+            self._json(code, {
                 "status": "error",
                 "query_type": lang,
                 "message": f"{type(exc).__name__}: {exc}",

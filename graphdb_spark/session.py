@@ -196,12 +196,6 @@ def serialized(mutation):
 class GraphSession:
     """Two-DataFrame property graph + KV store + query surfaces."""
 
-    #: REINDEX staging-name sequence: combined with the pid it makes
-    #: every staging generation unique across sessions AND processes,
-    #: so concurrent REINDEXes of the same layout name over a shared
-    #: warehouse can never write into each other's staging dirs.
-    _STAGE_SEQ = 0
-
     def __init__(self, spark: SparkSession, vertices: DataFrame | None = None,
                  edges: DataFrame | None = None, strict_indexing: bool = False,
                  assume_integrity: bool | None = None):
@@ -229,20 +223,10 @@ class GraphSession:
         self.strict_indexing = strict_indexing
         self._indexed: set[str] = set()
         self._mutation_count = 0
-        self._e_by_key: dict = {}  # use_bucketed_layout fills this
-        # monotonically bumped by every GRAPH-state (vertices/edges)
-        # swap; ensure_bucketed_layout records the version a layout was
-        # written/validated at, so a re-ensure on an unmutated session
-        # skips the content check entirely while ANY graph mutation —
-        # including count-preserving property upserts — forces it
-        # (VERDICT r9 item 1). KV-only swaps deliberately do NOT bump
-        # it: the layout describes vertices/edges, which a KV write
-        # cannot drift.
-        self._state_version = 0
-        self._layout_valid: dict = {}  # name -> (state_version, buckets)
-        # currently adopted layout (None when on plain frames); every
-        # graph swap divorces it
-        self._layout_name: str | None = None
+        self._e_by_key: dict = {}  # use_adjacency_layout fills this
+        # the frames the last use_adjacency_layout cached; the next
+        # adoption releases them
+        self._layout_frames: tuple = ()
         # enable_skew_salting fills this
         self._hot_endpoints: dict | None = None
         # writers hold _write_lock across read-modify-set_state (it is
@@ -313,20 +297,18 @@ class GraphSession:
         if kv is not None:
             self._kv = _cp(kv)
         if vertices is not None or edges is not None:
-            self._state_version += 1
-            # a graph mutation invalidates any adopted bucketed layout:
-            # the written tables describe the PREVIOUS state. The
-            # canonical _v/_e frames (just swapped) stay correct; hops
-            # simply lose the exchange-elision until
-            # ensure_bucketed_layout() is re-run. A KV-ONLY swap skips
-            # all of this: vertices/edges are bit-identical, so the
-            # layout, the graph memos, and the plan cache (cached
-            # Cypher plans are MATCH reads over the v/e views; Cypher
-            # KV reads go through kv_retrieve, a per-call collect that
-            # is never plan-cached) all remain valid — a kv_insert
-            # must not cost the session its exchange-elision contract.
+            # a graph mutation divorces any adopted layout: its edge
+            # copies hold the PREVIOUS state. The canonical _v/_e
+            # frames (just swapped) stay correct; hops simply lose the
+            # exchange-elision until use_adjacency_layout() is re-run.
+            # A KV-ONLY swap skips all of this: vertices/edges are
+            # bit-identical, so the layout, the graph memos, and the
+            # plan cache (cached Cypher plans are MATCH reads over the
+            # v/e views; Cypher KV reads go through kv_retrieve, a
+            # per-call collect that is never plan-cached) all remain
+            # valid — a kv_insert must not cost the session its
+            # exchange-elision contract.
             self._e_by_key = {}
-            self._layout_name = None
             self._register_views()
             # last, once every frame and view is the new one: a read
             # planned anywhere before this point is discarded with the
@@ -335,47 +317,37 @@ class GraphSession:
         return self
 
     @serialized
-    def use_bucketed_layout(self, name: str = "graph_adj",
-                            buckets: int = 32, write: bool = True,
-                            cache: bool = False) -> "GraphSession":
-        """Adopt the dual bucketed adjacency layout
-        (``partitioning.write_adjacency``): vertices bucketed by id,
-        edges stored twice — bucketed by src (forward) and by dst
-        (reversed) — the Spark twin of the reference's forward +
-        reversed edge indexes (rdb/managers.rs:233-240).
+    def use_adjacency_layout(self) -> "GraphSession":
+        """Adopt the dual adjacency layout of the current frames
+        (``partitioning.write_adjacency``): vertices partitioned and
+        sorted on id, edges kept twice — on src (forward) and on dst
+        (reversed) — in Spark's cache, the twin of the reference's
+        forward + reversed edge indexes (rdb/managers.rs:233-240).
 
-        After adoption, every traversal hop joins the copy bucketed on
-        its own key, so non-broadcast hops exchange only the frontier
-        (the edge relation's scan satisfies the join's required
-        distribution), and ``groupBy(src)`` degree aggregates plan
-        with zero exchange. ``write=False`` re-attaches tables a prior
-        call (or another session) already wrote. ``cache=True``
-        additionally caches the three frames — cached bucketed scans
-        keep their output partitioning because build_spark pins
-        canChangeCachedPlanOutputPartitioning=false semantics (Spark
-        default).
+        After adoption every traversal hop joins the copy partitioned
+        on its own key, so non-broadcast hops exchange only the
+        frontier, and ``groupBy(src)`` degree aggregates plan with no
+        exchange at query time.
 
         Layout is an *optimization contract*, not state: every graph
-        mutation (``set_state``, ``append_state``) divorces it, hops
-        fall back to the canonical frames, and the tables stay as
-        written — re-run ``ensure_bucketed_layout`` after bulk loads,
-        like a REINDEX."""
+        mutation (``set_state``, ``append_state``) divorces it and
+        hops fall back to the canonical frames. Calling this again
+        after writes lays out the current frames afresh — the
+        REINDEX — and releases the previous layout's cache."""
         from graphdb_spark import partitioning as P
 
-        if write:
-            P.write_adjacency(self._v, self._e, name, buckets)
-            self._layout_valid[name] = (self._state_version, buckets)
-        v, e_out, e_in = P.load_adjacency(self.spark, name)
-        if cache:
-            v, e_out, e_in = v.cache(), e_out.cache(), e_in.cache()
+        old = self._layout_frames
+        v, e_out, e_in = P.write_adjacency(self._v, self._e)
+        self._layout_frames = (v, e_out, e_in)
         self._v = v
         self._e = e_out  # canonical scan order: forward copy
         self._e_by_key = {"src": e_out, "dst": e_in}
-        self._layout_name = name
         self._register_views()
         # frames changed identity: derived memos are stale (dropped
         # last, as in set_state)
         self._drop_read_memos()
+        for df in old:
+            df.unpersist()
         return self
 
     def _drop_read_memos(self):
@@ -391,228 +363,19 @@ class GraphSession:
             self._frontier_cache = {}
             self._stats = {}
 
-    def ensure_bucketed_layout(self, name: str = "graph_adj",
-                               buckets: int = 32,
-                               cache: bool = False,
-                               assume_immutable: bool = False,
-                               ) -> "GraphSession":
-        """Adopt the dual bucketed adjacency, REUSING tables a prior
-        process already wrote under ``name`` when they still describe
-        this exact state — otherwise (re)write them. This is the
-        default-adoption entry point: the reference ALWAYS maintains
-        its forward + reversed edge indexes (rdb/managers.rs:233-240);
-        for a resident graph the one-time write amortizes in ~10-20
-        hop queries at sf10 (BENCH_sf10_bucketed.json). Callers that
-        key ``name`` to an immutable dataset (workloads.graph.
-        graph_session keys it to the sf_dir's file signature) get
-        cross-process reuse for free.
-
-        Stale-table guard (three tiers, cheapest first): (1) this
-        session already wrote/validated ``name`` at its CURRENT
-        ``_state_version`` and the tables are still cataloged — attach
-        with no scans; (2) otherwise compare order-independent content
-        fingerprints of the session frames against the spec stamped
-        next to the files at write time (``partitioning.
-        content_fingerprint`` — count + bit-XOR of row xxhash64 over
-        every column). Row counts alone are NOT enough: a
-        count-preserving mutation (update_vertex / set_properties
-        upserting values, mutations.py:66,162) would pass a count
-        guard and silently re-attach — and, because adoption replaces
-        the session's canonical frames, silently REVERT — the
-        pre-mutation state. The reference cannot hit this class of
-        bug: its indexes update transactionally with every write
-        (rdb/managers.rs:233-260); the fingerprint is our equivalent
-        invariant. (3) Mismatch → staged rewrite of ONLY the stale
-        relations (per-relation fingerprints): a vertex-property bulk
-        upsert rewrites one vertex table, not the two — much larger —
-        edge tables (partial REINDEX; VERDICT r9 item 2).
-
-        ``assume_immutable=True`` (for callers whose ``name`` embeds
-        the dataset's identity, like graph_session's file-signature
-        keys) downgrades tier 2 to metadata-only row counts — but ONLY
-        while this session is unmutated; any mutation re-arms the full
-        fingerprint compare."""
-        from graphdb_spark import partitioning as P
-
-        spark = self.spark
-        tables = [f"{name}_v", f"{name}_e_out", f"{name}_e_in"]
-        if self._layout_valid.get(name) == (
-            self._state_version, buckets,
-        ) and all(
-            spark.catalog.tableExists(t) for t in tables
-        ):
-            return self.use_bucketed_layout(name, buckets, write=False,
-                                            cache=cache)
-        try:
-            # same-process catalog hit, or cross-process re-attach over
-            # the surviving warehouse files (P.attach_adjacency) —
-            # refuses on bucket-count mismatch vs the files' spec
-            attach = P.attach_adjacency(spark, name, buckets)
-        except Exception:  # noqa: BLE001 — any attach failure → write
-            attach = False
-        stale, fp_v, fp_e = {"v", "e"}, None, None
-        if attach:
-            meta = P.read_layout_meta(spark, name)
-            if meta is None or meta.get("buckets") != buckets:
-                pass  # no trustworthy spec: full rewrite
-            elif (
-                assume_immutable
-                and self._state_version == 0
-                and (meta.get("v") or {}).get("n") == self._v.count()
-                and (meta.get("e") or {}).get("n") == self._e.count()
-            ):
-                # caller keys ``name`` to the dataset's identity (e.g.
-                # graph_session embeds the source files' signature) and
-                # this session is UNMUTATED — content cannot have
-                # drifted from what the name pins, so metadata-only
-                # row counts suffice. Any mutation (state_version > 0)
-                # voids the shortcut: mutated sessions ALWAYS pay the
-                # fingerprint compare — the r9 latent-bug flow.
-                stale = set()
-            else:
-                fp_v = P.content_fingerprint(self._v)
-                fp_e = P.content_fingerprint(self._e)
-                stale = set()
-                if meta.get("v") != fp_v:
-                    stale.add("v")
-                if meta.get("e") != fp_e:
-                    stale.add("e")
-        if stale:
-            self._reindex(name, buckets, stale, fp_v=fp_v, fp_e=fp_e)
-        self._layout_valid[name] = (self._state_version, buckets)
-        return self.use_bucketed_layout(name, buckets, write=False,
-                                        cache=cache)
-
-    def _reindex(self, name: str, buckets: int, stale: set,
-                 fp_v: dict | None = None, fp_e: dict | None = None):
-        """STAGED rewrite of the stale layout relations + swap, never
-        an in-place overwrite: after a mutation the session's frames
-        may themselves read the old layout tables (layout-frame +
-        delta lineage), and overwrite-saveAsTable deletes the files it
-        is about to read from. Writing a staging generation first
-        keeps the sources consistent; the swap is metadata + a dir
-        rename. A crash between drop and rename just loses (part of)
-        the layout — the next ensure detects the missing table and
-        writes fresh (REINDEX semantics). ``stale`` picks the
-        relations: {"v"} rewrites one table, {"e"} the two edge
-        copies, both the full three-table REINDEX.
-
-        Concurrency: staging names are PER-PROCESS unique (pid +
-        sequence), so two drivers REINDEXing the same ``name`` over a
-        shared warehouse can never write into each other's staging
-        dirs — the swap is last-writer-wins per table, and a loser
-        whose rename fails because the winner's tables landed first
-        ACCEPTS the winner's layout iff its stamped fingerprints match
-        this session's state (always true for signature-keyed names,
-        where the name pins the content). Readers racing a swap can
-        fail transiently (non-transactional FS rename) and recover at
-        the next ensure; abandoned stages from crashed processes are
-        age-gated garbage-collected."""
-        import os
-        import shutil
-
-        from graphdb_spark import partitioning as P
-
-        spark = self.spark
-        GraphSession._STAGE_SEQ += 1
-        stage = f"{name}__stage{os.getpid():x}_{GraphSession._STAGE_SEQ}"
-        P.gc_stale_stages(spark, name)
-        P.drop_adjacency(spark, stage)
-        if stale == {"v", "e"}:
-            # full REINDEX: write_adjacency stamps fresh meta into the
-            # staged _v dir; the renames carry it into place
-            # pass any fingerprints the caller already holds (ensure's
-            # staleness compare computed them) — write_adjacency stamps
-            # them instead of paying one recompute scan per relation
-            P.write_adjacency(self._v, self._e, stage, buckets,
-                              fp_v=fp_v, fp_e=fp_e)
-            renamed = 0
-            try:
-                P.drop_adjacency(spark, name)
-                for sfx in ("_v", "_e_out", "_e_in"):
-                    spark.sql(
-                        f"ALTER TABLE `{stage}{sfx}` RENAME TO `{name}{sfx}`"
-                    )
-                    renamed += 1
-            except Exception:
-                if renamed == 0:
-                    # lost a concurrent swap race cleanly: a peer's
-                    # complete generation landed between our drop and
-                    # first rename. Accept it ONLY when its spec
-                    # describes exactly this session's state (compare
-                    # against our own staged meta — write_adjacency
-                    # just computed those fingerprints, no rescans);
-                    # anything else re-raises (ensure's caller falls
-                    # back / rewrites — never silent wrong data).
-                    meta = P.read_layout_meta(spark, name)
-                    want = P.read_layout_meta(spark, stage) or {}
-                    fpv = fp_v or want.get("v")
-                    fpe = fp_e or want.get("e")
-                    if (
-                        meta is not None
-                        and fpv is not None
-                        and fpe is not None
-                        and meta.get("buckets") == buckets
-                        and meta.get("v") == fpv
-                        and meta.get("e") == fpe
-                        and P.attach_adjacency(spark, name, buckets)
-                    ):
-                        P.drop_adjacency(spark, stage)
-                        return
-                else:
-                    # mid-swap failure: a PARTIAL generation must not
-                    # survive behind a valid-looking sidecar (the _v
-                    # rename carries our meta; a later ensure would
-                    # trust it over mixed files). Drop what landed —
-                    # the next ensure finds no spec and rewrites.
-                    P.drop_adjacency(spark, name)
-                raise
-            return
-        # partial REINDEX: preserve the fresh relation's tables and
-        # fingerprint, swap only the stale one
-        old_meta = P.read_layout_meta(spark, name) or {}
-        specs = {
-            "v": [("_v", self._v, "id")],
-            "e": [("_e_out", self._e, "src"), ("_e_in", self._e, "dst")],
-        }
-        todo = [t for k in sorted(stale) for t in specs[k]]
-        for sfx, df, key in todo:
-            P.write_adjacency_table(df, f"{stage}{sfx}", key, buckets)
-        # the swap is multi-step and non-transactional: kill the
-        # sidecar FIRST so no intermediate state can ever attach — a
-        # crash between the _e_out and _e_in swaps would otherwise
-        # leave mixed-generation edge copies behind a still-matching
-        # spec (out-hops and in-hops silently disagreeing); with the
-        # meta gone, the next ensure finds no trustworthy spec and
-        # rewrites fully
-        P.invalidate_layout_meta(spark, name)
-        for sfx, _, _ in todo:
-            loc = P.adjacency_table_location(spark, f"{name}{sfx}")
-            spark.sql(f"DROP TABLE IF EXISTS `{name}{sfx}`")
-            shutil.rmtree(loc, ignore_errors=True)
-            spark.sql(f"ALTER TABLE `{stage}{sfx}` RENAME TO `{name}{sfx}`")
-        P.write_layout_meta(spark, name, {
-            "buckets": buckets,
-            "v": (fp_v or P.content_fingerprint(self._v))
-            if "v" in stale else old_meta.get("v"),
-            "e": (fp_e or P.content_fingerprint(self._e))
-            if "e" in stale else old_meta.get("e"),
-        })
-
     @serialized
     def append_state(self, vertices: DataFrame | None = None,
                      edges: DataFrame | None = None) -> "GraphSession":
         """Row-ADD mutation (create_vertex / bulk_insert / the streaming
         insert fold): union the new rows onto the current frames and
         swap them in. Like any graph swap it divorces an adopted
-        layout; a later ``ensure_bucketed_layout`` re-indexes the
-        relations the rows made stale."""
+        layout; a later ``use_adjacency_layout`` re-indexes."""
         v = self._v.unionByName(vertices) if vertices is not None else None
         e = self._e.unionByName(edges) if edges is not None else None
         return self.set_state(vertices=v, edges=e)
 
     def edges_for(self, direction: str) -> DataFrame:
-        """Direction-appropriate edge frame: the copy bucketed on the
+        """Direction-appropriate edge frame: the copy partitioned on the
         hop key when a layout is adopted ('out' joins on src, 'in' on
         dst), else the canonical frame. 'both' has no single hop key —
         callers pass ``edges_for('out')`` plus ``reversed_edges()`` so
@@ -854,11 +617,10 @@ class GraphSession:
             direction: str = "out"):
         from graphdb_spark.operators.traversal import bfs
 
-        # directed traversals read the copy bucketed+sorted on their
-        # hop key when a layout is adopted: phase-1's `src IN (...)`
-        # pushdown then prunes sorted row groups, and phase-2's
-        # non-broadcast hops skip the edge-side exchange; both-
-        # direction hops read EACH orientation from its own-key copy
+        # directed traversals read the copy partitioned+sorted on
+        # their hop key when a layout is adopted: non-broadcast hops
+        # skip the edge-side exchange; both-direction hops read EACH
+        # orientation from its own-key copy
         return bfs(self.edges_for(direction), start_id, max_depth, t,
                    direction, max_branch=self.max_branch(direction),
                    edges_in=self.reversed_edges())

@@ -69,8 +69,8 @@ class Translator:
                  edges_by_key: dict | None = None):
         self.v = vertices
         self.e = edges
-        # dual bucketed adjacency (partitioning.write_adjacency): maps
-        # join key -> edge frame pre-bucketed on that key. A hop that
+        # dual adjacency layout (partitioning.write_adjacency): maps
+        # join key -> edge frame pre-partitioned on that key. A hop that
         # joins on "src" reads the forward copy, "dst" the reversed —
         # the Spark twin of the reference's forward/reversed edge
         # indexes (rdb/managers.rs:233-240). Same rows either way;
@@ -230,7 +230,7 @@ class Translator:
                     q.inner, (A.SpecificVertex, A.RangeVertex)
                 )
                 key = "src" if q.direction == A.Direction.OUT else "dst"
-                # direction-appropriate bucketed copy: the hop join's
+                # direction-appropriate partitioned copy: the hop join's
                 # required distribution is satisfied by the scan, so a
                 # non-broadcast hop exchanges only the frontier ids
                 E = self.edges_by_key.get(key, E)

@@ -10,8 +10,6 @@ capability layer — the IndraDB pipe algebra (SURVEY.md §2.1/2.3/2.4)
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from graphdb_spark.algebra import Q
@@ -21,72 +19,13 @@ from graphdb_spark.datamodel import local_df
 
 _GRAPH_CACHE: dict = {}
 
-#: auto-adopt the dual bucketed adjacency (the reference's always-on
-#: forward + reversed edge indexes, rdb/managers.rs:233-240) for
-#: resident graphs at or above this edge count. Below it every hop's
-#: frontier broadcasts anyway and the one-time write cannot pay for
-#: itself; above it the layout is a measured 3-7x on hop-bound heads
-#: (BENCH_sf10_bucketed.json) and the write cost amortizes in 10-20
-#: queries. sf0.1 (~744k edges) adopts; the sf0.01 gate and unit-test
-#: graphs (7k-74k) stay on plain cached frames.
-AUTO_LAYOUT_MIN_EDGES = int(
-    os.environ.get("SPARK_GRAFT_AUTO_LAYOUT_EDGES", "500000")
-)
-ADJ_BUCKETS = 32
-
-
-def _dataset_slug(sf_dir: str) -> str:
-    """Identity slug for an sf_dir: human-readable path slug + a hash
-    of the RAW path. The regex slug alone is lossy — distinct dirs
-    like ``/data/sf0.1`` and ``/data/sf0/1`` collapse to the same
-    slug, so a GC keyed on it could delete the OTHER dataset's live
-    layout (ADVICE r9); the path hash makes the slug injective."""
-    import hashlib
-    import re
-
-    slug = re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir).strip("_").lower()
-    ph = hashlib.sha1(sf_dir.encode()).hexdigest()[:6]
-    return f"{slug}_{ph}"
-
-
-def _adjacency_name(sf_dir: str, buckets: int) -> str:
-    """Layout table-name prefix keyed to the dataset identity:
-    injective path slug + bucket count + a signature of the source
-    files' (size, mtime). A regenerated sf_dir gets a NEW name, so a
-    stale layout can never be re-attached to different data; old
-    signatures are garbage-collected at adoption time."""
-    import hashlib
-
-    sig = hashlib.sha1()
-    for fname in ("customer.parquet", "orders.parquet",
-                  "lineitem.parquet", "part.parquet"):
-        try:
-            st = os.stat(os.path.join(sf_dir, fname))
-            sig.update(f"{fname}:{st.st_size}:{int(st.st_mtime)};".encode())
-        except OSError:
-            sig.update(f"{fname}:absent;".encode())
-    return f"adj_{_dataset_slug(sf_dir)}_{buckets}b_{sig.hexdigest()[:10]}"
-
-
-def _gc_stale_adjacency(spark, sf_dir: str, buckets: int, keep: str):
-    """Best-effort removal of adjacency layouts from earlier
-    generations of the same sf_dir (regenerated testdata ⇒ new
-    signature ⇒ the old tables are dead weight in the warehouse).
-    Scope is exactly this dataset at exactly this bucket count — the
-    injective slug keeps other datasets' layouts out of reach, and
-    pinning the bucket count keeps a deliberately different-buckets
-    layout of the SAME dataset alive (ADVICE r9)."""
-    import glob
-
-    from graphdb_spark import partitioning as P
-
-    pattern = P.adjacency_table_location(
-        spark, f"adj_{_dataset_slug(sf_dir)}_{buckets}b_*_v"
-    )
-    for loc in glob.glob(pattern):
-        name = os.path.basename(loc)[: -len("_v")]
-        if name != keep:
-            P.drop_adjacency(spark, name)
+#: adopt the dual adjacency layout (the reference's always-on forward
+#: + reversed edge indexes, rdb/managers.rs:233-240) for resident
+#: graphs at or above this edge count. Below it every hop's frontier
+#: broadcasts anyway and the layout's extra edge copy buys nothing.
+#: sf0.1 (~750k edges) adopts; the sf0.01 gate and unit-test graphs
+#: (7k-75k) stay on plain cached frames.
+AUTO_LAYOUT_MIN_EDGES = 500_000
 
 
 def _resident(spark, v, e) -> GraphSession:
@@ -102,14 +41,12 @@ def graph_session(spark, sf_dir) -> GraphSession:
     queries (the reference keeps the graph resident in its daemons —
     our equivalent is a cached DataFrame pair).
 
-    Default layout policy (VERDICT r8 item 1): at or above
-    AUTO_LAYOUT_MIN_EDGES edges the session adopts the dual bucketed
-    adjacency via ensure_bucketed_layout — re-attaching tables an
-    earlier process wrote for this exact dataset (signature-keyed
-    name), else writing them once — and caches the bucketed frames.
-    Below the threshold the plain cached frames remain (their hops
-    broadcast the frontier; the layout buys nothing). Disable with
-    SPARK_GRAFT_AUTO_LAYOUT=0.
+    Layout policy: at or above AUTO_LAYOUT_MIN_EDGES edges the session
+    adopts the dual adjacency layout (``use_adjacency_layout``): the
+    vertices and two edge copies cached hash-partitioned and sorted on
+    id, src and dst, in ``defaultParallelism`` partitions. Below the
+    threshold the plain cached frames remain (their hops broadcast the
+    frontier; the layout buys nothing).
 
     The plain cache is core-sized (:func:`_resident`): each frame is
     coalesced to ``defaultParallelism`` partitions before caching, so
@@ -126,50 +63,9 @@ def graph_session(spark, sf_dir) -> GraphSession:
         # FK-derived from TPC-H keys: every edge endpoint exists by
         # construction, so the Cypher planner may elide anonymous-
         # endpoint existence joins
-        auto = os.environ.get("SPARK_GRAFT_AUTO_LAYOUT", "1") != "0"
-        if auto and e.count() >= AUTO_LAYOUT_MIN_EDGES:
-            import sys
-            import time
-
+        if e.count() >= AUTO_LAYOUT_MIN_EDGES:
             g = GraphSession(spark, v, e, assume_integrity=True)
-            name = _adjacency_name(sf_dir, ADJ_BUCKETS)
-            t0 = time.perf_counter()
-            try:
-                # assume_immutable: the name embeds the source files'
-                # signature and the session is freshly built from
-                # exactly those files — adoption re-checks row counts
-                # (metadata-only) instead of full-column fingerprints
-                g.ensure_bucketed_layout(name, ADJ_BUCKETS, cache=True,
-                                         assume_immutable=True)
-                print(
-                    f"# graph_session: bucketed layout '{name}' adopted "
-                    f"in {time.perf_counter() - t0:.2f}s",
-                    file=sys.stderr,
-                )
-                # GC of PRIOR generations is best-effort housekeeping:
-                # it must never void a successful adoption (the except
-                # below rebuilds a plain session, discarding the three
-                # cached layout frames it can no longer unpersist)
-                try:
-                    _gc_stale_adjacency(spark, sf_dir, ADJ_BUCKETS,
-                                        keep=name)
-                except Exception as gc_exc:  # noqa: BLE001
-                    print(
-                        f"# graph_session: stale-layout GC failed "
-                        f"({gc_exc!r}); continuing on adopted layout",
-                        file=sys.stderr,
-                    )
-            except Exception as exc:  # noqa: BLE001
-                # layout adoption is an OPTIMIZATION — a write failure
-                # (read-only / full warehouse dir) must degrade to the
-                # plain cached session, not break every graph workload
-                # (ADVICE r9)
-                print(
-                    f"# graph_session: layout adoption failed ({exc!r});"
-                    " falling back to plain cached frames",
-                    file=sys.stderr,
-                )
-                g = _resident(spark, v, e)
+            g.use_adjacency_layout()
         else:
             g = _resident(spark, v, e)
         _GRAPH_CACHE[key] = g

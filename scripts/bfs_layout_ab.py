@@ -4,8 +4,9 @@ job-floor artifact (frontier pushdown already optimal) or a
 layout-routing overhead that only pays at large SF?
 
 Runs the same GraphSession.bfs("c_1", depth<=2, out) N times on
-(a) plain cached frames and (b) the adopted bucketed layout, in the
-SAME process, reporting per-run times and minima.
+(a) plain cached frames and (b) the adopted adjacency layout
+(GraphSession.use_adjacency_layout), in the SAME process, reporting
+per-run times, minima and the one-time layout cost.
 
 Usage: python scripts/bfs_layout_ab.py [sf_dir] [runs]
 """
@@ -21,7 +22,6 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from graphdb_spark.session import GraphSession, build_spark  # noqa: E402
 from graphdb_spark.sources.tpch import tpch_graph  # noqa: E402
-from graphdb_spark import partitioning as P  # noqa: E402
 
 
 def run_bfs(g):
@@ -50,21 +50,20 @@ def main():
         t, n_plain = run_bfs(plain)
         plain_times.append(round(t, 3))
 
-    name = "bfs_ab_adj"
-    P.drop_adjacency(spark, name)
     lay = GraphSession(spark, v, e, assume_integrity=True)
-    lay.ensure_bucketed_layout(name, 32, cache=True)
-    lay.vertices.count(), lay.edges.count()
+    t0 = time.perf_counter()
+    lay.use_adjacency_layout()
+    layout_s = round(time.perf_counter() - t0, 3)
     lay_times, n_lay = [], None
     for _ in range(runs):
         t, n_lay = run_bfs(lay)
         lay_times.append(round(t, 3))
     assert n_plain == n_lay, (n_plain, n_lay)
 
-    P.drop_adjacency(spark, name)
     print(json.dumps({
         "sf_dir": sf_dir, "rows": n_plain,
         "plain": plain_times, "plain_min": min(plain_times),
+        "layout_s": layout_s,
         "layout": lay_times, "layout_min": min(lay_times),
     }))
     spark.stop()

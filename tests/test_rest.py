@@ -87,6 +87,27 @@ def test_invalid_query_is_400_not_500(server):
     assert "definitely_not_a_column" in body["message"]
 
 
+@pytest.mark.parametrize("error, code", [
+    (RuntimeError("executor lost"), 500),
+    (ValueError("Cypher syntax error"), 400),
+    (LookupError("property is not indexed"), 400),
+], ids=["engine_fault", "value_error", "lookup_error"])
+def test_engine_fault_is_500_client_error_400(server, monkeypatch,
+                                              error, code):
+    """A failure of the engine itself answers 500; only the client's
+    own errors answer 400. Both keep the error envelope."""
+    def fail(_query):
+        raise error
+
+    monkeypatch.setattr(server._httpd.graph, "execute", fail)
+    got, body = _post(server.url + "/api/v1/query", {
+        "query": "MATCH (c:customer) RETURN count(c) AS n",
+    })
+    assert (got, body["status"], body["query_type"]) == (
+        code, "error", "Cypher")
+    assert body["message"] == f"{type(error).__name__}: {error}"
+
+
 def test_missing_query_field_is_400(server):
     code, body = _post(server.url + "/api/v1/query", {"persist": True})
     assert code == 400

@@ -430,12 +430,11 @@ def test_fold_appends_batch_layout_maintained(spark):
     """Insert-only fold: the appended rows are served, endpoint
     validation drops dangling edges, in-batch duplicates collapse, and
     a batch carrying deletes raises loudly. The write divorces an
-    adopted layout without touching its tables, and a later ensure
-    re-indexes them to the folded state; an empty micro-batch is no
+    adopted layout, whose frames keep the pre-fold rows, and a later
+    re-adoption lays out the folded state; an empty micro-batch is no
     swap at all and keeps the layout adopted."""
     import pytest as _pytest
 
-    from graphdb_spark import partitioning as P
     from graphdb_spark.datamodel import local_df
     from graphdb_spark.session import GraphSession
     from graphdb_spark.streaming.graph_updates import fold_appends
@@ -450,49 +449,44 @@ def test_fold_appends_batch_layout_maintained(spark):
         "properties map<string,string>",
     )
     g = GraphSession(spark, v, e, assume_integrity=True)
-    name = "t_fold_append"
-    try:
-        g.use_bucketed_layout(name, buckets=4)
-        assert g._layout_name == name
+    g.use_adjacency_layout()
+    assert g._e_by_key
+    pre_fold = g._layout_frames
+    fold_appends(g, _mk_changes(spark, [
+        (None, "vertex", "upsert", "c", "N", None, None, None, {}),
+        # in-batch duplicate id: collapses to one row
+        (None, "vertex", "upsert", "c", "N", None, None, None, {}),
+        # edge to a vertex added IN THIS batch: valid
+        (None, "edge", "upsert", None, None, "b", "L", "c", {}),
+        # dangling edge: 'z' exists nowhere -> dropped
+        (None, "edge", "upsert", None, None, "a", "L", "z", {}),
+    ]))
+    # divorced like any graph swap; the layout frames still hold the
+    # pre-fold rows
+    assert not g._e_by_key
+    assert g.vertex_count() == 3 and g.edge_count() == 2
+    assert [df.count() for df in pre_fold] == [2, 1, 1]
+    # a later adoption lays out the folded state
+    g.use_adjacency_layout()
+    assert g._e_by_key and g._layout_frames[1] is not pre_fold[1]
+    assert g.vertex_count() == 3 and g.edge_count() == 2
+    assert [df.count() for df in g._layout_frames] == [3, 2, 2]
+    adopted = g._e_by_key
+    fold_appends(g, _mk_changes(spark, []))
+    assert g._e_by_key is adopted
+    # deletes are a contract violation, not a silent append
+    with _pytest.raises(ValueError, match="insert-only"):
         fold_appends(g, _mk_changes(spark, [
-            (None, "vertex", "upsert", "c", "N", None, None, None, {}),
-            # in-batch duplicate id: collapses to one row
-            (None, "vertex", "upsert", "c", "N", None, None, None, {}),
-            # edge to a vertex added IN THIS batch: valid
-            (None, "edge", "upsert", None, None, "b", "L", "c", {}),
-            # dangling edge: 'z' exists nowhere -> dropped
-            (None, "edge", "upsert", None, None, "a", "L", "z", {}),
+            (None, "vertex", "delete", "a", None, None, None, None,
+             None),
         ]))
-        # divorced like any graph swap; the tables still hold the
-        # pre-fold rows
-        assert g._layout_name is None and not g._e_by_key
-        assert g.vertex_count() == 3 and g.edge_count() == 2
-        meta = P.read_layout_meta(spark, name)
-        assert meta["v"]["n"] == 2 and meta["e"]["n"] == 1
-        # a later ensure re-indexes both relations to the folded state
-        g.ensure_bucketed_layout(name, buckets=4)
-        assert g._layout_name == name and g._e_by_key
-        assert g.vertex_count() == 3 and g.edge_count() == 2
-        meta = P.read_layout_meta(spark, name)
-        assert meta["v"]["n"] == 3 and meta["e"]["n"] == 2
-        fold_appends(g, _mk_changes(spark, []))
-        assert g._layout_name == name
-        # deletes are a contract violation, not a silent append
-        with _pytest.raises(ValueError, match="insert-only"):
-            fold_appends(g, _mk_changes(spark, [
-                (None, "vertex", "delete", "a", None, None, None, None,
-                 None),
-            ]))
-    finally:
-        P.drop_adjacency(spark, name)
 
 
 def test_apply_append_stream_matches_batch(spark, tmp_path):
     """True streaming run of the append path: two disjoint insert
     micro-batches drained with availableNow; final state equals the
     one-shot batch fold. The folds divorce the adopted layout, and a
-    later ensure serves the same rows from re-indexed tables."""
-    from graphdb_spark import partitioning as P
+    later re-adoption serves the same rows from the new layout."""
     from graphdb_spark.datamodel import local_df
     from graphdb_spark.session import GraphSession
     from graphdb_spark.streaming.graph_updates import (
@@ -519,32 +513,28 @@ def test_apply_append_stream_matches_batch(spark, tmp_path):
     ]).coalesce(1).write.mode("overwrite").parquet(f"{src}/b1")
 
     g = GraphSession(spark, v, e, assume_integrity=True)
-    name = "t_append_stream"
-    try:
-        g.use_bucketed_layout(name, buckets=4)
-        q = apply_append_stream(
-            g,
-            change_stream_from_files(spark, f"{src}/b*",
-                                     max_files_per_trigger=1),
-            checkpoint_dir=str(tmp_path / "ckpt"),
+    g.use_adjacency_layout()
+    q = apply_append_stream(
+        g,
+        change_stream_from_files(spark, f"{src}/b*",
+                                 max_files_per_trigger=1),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(120)
+    assert not g._e_by_key
+    assert g.vertex_count() == 3 and g.edge_count() == 2
+
+    def edges():
+        return sorted(
+            (r["src"], r["relationship"], r["dst"])
+            for r in g.edges.collect()
         )
-        q.awaitTermination(120)
-        assert g._layout_name is None and not g._e_by_key
-        assert g.vertex_count() == 3 and g.edge_count() == 2
 
-        def edges():
-            return sorted(
-                (r["src"], r["relationship"], r["dst"])
-                for r in g.edges.collect()
-            )
-
-        assert edges() == [("a", "L", "b"), ("b", "L", "c")]
-        g.ensure_bucketed_layout(name, buckets=4)
-        assert g._layout_name == name and g._e_by_key
-        assert g.vertex_count() == 3 and edges() == [
-            ("a", "L", "b"), ("b", "L", "c")]
-    finally:
-        P.drop_adjacency(spark, name)
+    assert edges() == [("a", "L", "b"), ("b", "L", "c")]
+    g.use_adjacency_layout()
+    assert g._e_by_key and g.edges is g._e_by_key["src"]
+    assert g.vertex_count() == 3 and edges() == [
+        ("a", "L", "b"), ("b", "L", "c")]
 
 
 def test_stream_append_ingest_gate_semantics(spark):
