@@ -187,10 +187,8 @@ def test_adjacency_layout_preserves_results(spark, adj_graph):
     """use_adjacency_layout is a pure layout change: every pipe query
     (out-hop, in-hop, 2-hop count, degree groupBy) returns exactly the
     plain-layout answer; a mutation drops the layout (its frames hold
-    the old state), and re-adoption after a count-preserving upsert
-    serves the new values, not the laid-out old ones."""
+    the old state)."""
     from graphdb_spark.algebra import Q
-    from graphdb_spark.operators.mutations import set_properties
 
     g = adj_graph
     two_hop = (
@@ -223,26 +221,37 @@ def test_adjacency_layout_preserves_results(spark, adj_graph):
     # bfs over the layout matches too (forward copy, depth map)
     assert sorted(map(tuple, g.bfs("c_0", max_depth=2).collect())) == plain_bfs
 
-    # count-preserving content mutation: flip every BUILDING
-    # customer's segment (same rows, new property values); the
-    # re-adopted layout serves the POST-mutation state
+    # mutation invalidates: the layout frames describe the old state
+    g.set_state(edges=g.edges.limit(0))
+    assert not g._e_by_key
+    assert g.get(Q.edges().count())[-1].count == 0
+
+
+def test_ensure_layout_detects_count_preserving_mutation(spark, adj_graph):
+    """A mutation that changes content but not cardinality (a
+    set_properties upsert) drops an adopted layout, and re-adoption
+    lays out the post-mutation state: the session serves the new
+    values, not the laid-out old ones."""
+    from graphdb_spark.algebra import Q
+    from graphdb_spark.operators.mutations import set_properties
+
+    g = adj_graph
+    g.use_adjacency_layout()
+    adopted = g._e_by_key
+    assert adopted
     before = g.vertices.count()
+    # flip every BUILDING customer's segment (same rows, new values)
     set_properties(
         g, Q.vertices_with_property_value("mktsegment", "BUILDING"),
         "mktsegment", "MACHINERY",
     )
     assert not g._e_by_key and g.vertices.count() == before
     g.use_adjacency_layout()
-    assert g._e_by_key
+    assert g._e_by_key and g._e_by_key is not adopted
     assert g.df(Q.vertices_with_property_value(
         "mktsegment", "BUILDING")).count() == 0
     assert g.df(Q.vertices_with_property_value(
         "mktsegment", "MACHINERY")).count() == 20
-
-    # mutation invalidates: the layout frames describe the old state
-    g.set_state(edges=g.edges.limit(0))
-    assert not g._e_by_key
-    assert g.get(Q.edges().count())[-1].count == 0
 
 
 def _plan_nodes(node):
