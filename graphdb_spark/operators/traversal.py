@@ -13,20 +13,26 @@ Reference parity:
 
 Scale design (the §7.3 hard-parts list):
 - frontier DataFrame per depth, joined against the edge table — each
-  hop is one equi-join shuffle; small frontiers broadcast via AQE;
+  hop is one equi-join; frontiers broadcast while their measured size
+  is provably small;
 - visited-set anti-join prevents revisits (cycle safety + no
   exponential blowup);
-- ``localCheckpoint()`` every CHECKPOINT_EVERY hops truncates lineage
-  (driver-side loop, the §7.3 lineage-blowup mitigation);
+- a lazy ``localCheckpoint()`` per hop truncates lineage (driver-side
+  loop, the §7.3 lineage-blowup mitigation);
 - early exit when the frontier empties or (shortest_path) the target
   is reached.
+
+One step builder (:func:`_edges_step`) serves every traversal here,
+and one frontier loop (:func:`_expand`) serves the reachability ones:
+``bfs``, ``multi_source_bfs`` and ``var_length_expand``. The others
+keep their own loops because they carry paths, distances or labels.
 """
 
 from __future__ import annotations
 
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from graphdb_spark.datamodel import local_df
 
@@ -98,8 +104,13 @@ def _rightsize(df: DataFrame, rows: int) -> DataFrame:
 
 
 def _edges_step(edges: DataFrame, t: str | None, direction: str,
-                edges_in: DataFrame | None = None) -> DataFrame:
-    """(from, to) pairs for one hop. direction: out | in | both.
+                edges_in: DataFrame | None = None,
+                **extra: Column) -> DataFrame:
+    """(from, to, *extra) rows for one hop. direction: out | in | both.
+
+    ``extra`` names columns carried with each pair, e.g.
+    ``rel=F.col("relationship")`` or ``w=F.col("w")``; each expression
+    is evaluated on the edge row in either orientation.
 
     ``edges_in``: same rows as ``edges`` but stored dst-keyed (the
     reversed copy of partitioning.write_adjacency). When the layout
@@ -112,13 +123,66 @@ def _edges_step(edges: DataFrame, t: str | None, direction: str,
     if t is not None:
         edges = edges.filter(F.col("relationship") == t)
         rev = rev.filter(F.col("relationship") == t)
-    out = edges.select(F.col("src").alias("from"), F.col("dst").alias("to"))
-    inn = rev.select(F.col("dst").alias("from"), F.col("src").alias("to"))
+    cols = [c.alias(name) for name, c in extra.items()]
+    out = edges.select(F.col("src").alias("from"), F.col("dst").alias("to"),
+                       *cols)
+    inn = rev.select(F.col("dst").alias("from"), F.col("src").alias("to"),
+                     *cols)
     if direction == "out":
         return out
     if direction == "in":
         return inn
     return out.unionByName(inn)
+
+
+def _expand(step: DataFrame, visited: DataFrame, frontier: DataFrame,
+            n_visited: int, n_frontier: int, depth: int, max_depth: int,
+            keys: tuple[str, ...] = ()) -> DataFrame:
+    """The level-synchronous frontier loop of every reachability
+    traversal: hops ``depth..max_depth`` from ``frontier`` over
+    ``step`` (see :func:`_edges_step`). Returns ``visited`` plus every
+    newly reached ``(*keys, id, depth)`` row at its minimal depth.
+    ``keys`` name the columns a traversal carries per row (a seed or
+    start id), so one loop serves k sources at once. ``n_visited`` and
+    ``n_frontier`` are the exact row counts of the two inputs.
+
+    Per hop: frontier join with probe-informed broadcast, ``distinct``
+    ids, anti-join against the visited set, then one lazy
+    localCheckpoint plus count — ONE job both materializes the hop
+    (consumed twice more: visited union, next hop's join) and answers
+    the emptiness probe; an eager checkpoint plus a separate isEmpty()
+    would be two. The last hop has no consumer of that probe, so it
+    stays lazy and the caller's action computes it."""
+    while depth <= max_depth:
+        nxt = (
+            step.join(
+                _maybe_broadcast(
+                    frontier.select(*keys, F.col("id").alias("from")),
+                    n_frontier,
+                ),
+                "from",
+            )
+            .select(*keys, F.col("to").alias("id"))
+            .distinct()
+            .join(
+                _maybe_broadcast(visited.select(*keys, "id"), n_visited),
+                [*keys, "id"],
+                "left_anti",
+            )
+            .withColumn("depth", F.lit(depth))
+        )
+        if depth == max_depth:
+            return visited.unionByName(nxt)
+        nxt = nxt.localCheckpoint(eager=False)
+        n_frontier = nxt.count()
+        if n_frontier == 0:
+            break
+        nxt = _rightsize(nxt, n_frontier)
+        visited = visited.unionByName(nxt)
+        n_visited += n_frontier
+        frontier = nxt
+        depth += 1
+    return visited
 
 
 #: frontier-as-predicate bound: while |frontier| × max_branch fits,
@@ -136,7 +200,6 @@ ISIN_FRONTIER_MAX = 4096
 def bfs(edges: DataFrame, start_id: str, max_depth: int = 5,
         t: str | None = None, direction: str = "out",
         max_branch: int | None = None,
-        hops_per_round: int = 1,
         frontier_pushdown: bool = True,
         edges_in: DataFrame | None = None) -> DataFrame:
     """Breadth-first reachability: (id, depth) for every vertex within
@@ -159,16 +222,11 @@ def bfs(edges: DataFrame, start_id: str, max_depth: int = 5,
     1.3 s warm depth-2).
 
     Phase 2, the 100 TB-safe distributed loop — entered the moment the
-    bound outgrows the cap (or when no ``max_branch`` is known):
-    per-hop equi-join with probe-informed broadcast, visited anti-join,
-    checkpointed frontiers. State carries over from phase 1.
-
-    ``hops_per_round=2`` fuses two phase-2 hops into each probe round
-    (the intra-round hop's broadcast decision uses the n_frontier ×
-    max_branch BOUND instead of an exact count, so it needs
-    ``max_branch``). Measured (NOTES r7): wins only marginally on
-    shallow traversals at sf1 and LOSES at sf10 — the per-hop cost is
-    the edge-relation scan, not the probe job — so the default stays 1.
+    bound outgrows the cap (or when no ``max_branch`` is known): the
+    shared frontier loop :func:`_expand` (per-hop equi-join with
+    probe-informed broadcast, visited anti-join, checkpointed
+    frontiers), run with AQE off (:func:`_no_aqe`). State carries over
+    from phase 1.
 
     ``frontier_pushdown=False`` disables phase 1 (tests use it to
     exercise the distributed loop at unit scale). ``edges_in``: the
@@ -220,83 +278,9 @@ def bfs(edges: DataFrame, start_id: str, max_depth: int = 5,
         [(i, visited_local[i]) for i in frontier_ids],
         "id string, depth int",
     )
-    n_frontier, n_visited = len(frontier_ids), len(visited_local)
-    fuse2 = hops_per_round == 2 and max_branch is not None and max_branch > 0
     with _no_aqe(spark):
-        while depth <= max_depth:
-            nxt = (
-                step.join(
-                    _maybe_broadcast(
-                        frontier.select(F.col("id").alias("from")), n_frontier
-                    ),
-                    "from",
-                    "inner",
-                )
-                .select(F.col("to").alias("id"))
-                .distinct()
-                .join(
-                    _maybe_broadcast(visited.select("id"), n_visited),
-                    "id",
-                    "left_anti",
-                )
-                .withColumn("depth", F.lit(depth))
-            )
-            if fuse2 and depth + 1 <= max_depth:
-                # fused second hop: frontier bound stands in for the
-                # exact count Spark doesn't have yet (conservative —
-                # a too-big bound only forgoes the broadcast hint)
-                bound1 = n_frontier * max_branch
-                nxt2 = (
-                    step.join(
-                        _maybe_broadcast(
-                            nxt.select(F.col("id").alias("from")), bound1
-                        ),
-                        "from",
-                        "inner",
-                    )
-                    .select(F.col("to").alias("id"))
-                    .distinct()
-                    .join(
-                        _maybe_broadcast(visited.select("id"), n_visited),
-                        "id",
-                        "left_anti",
-                    )
-                    .join(
-                        _maybe_broadcast(nxt.select("id"), bound1),
-                        "id",
-                        "left_anti",
-                    )
-                    .withColumn("depth", F.lit(depth + 1))
-                )
-                nxt = nxt.unionByName(nxt2)
-                depth += 1
-            if depth == max_depth:
-                # terminal hop/round: nothing iterates after it, so the
-                # probe job (whose only consumers are the NEXT round's
-                # broadcast decision and early exit) is pure overhead —
-                # leave it lazy and let the caller's action compute it
-                visited = visited.unionByName(nxt)
-                break
-            # lazy checkpoint + count: ONE job both materializes the
-            # round's layers (consumed twice more: visited union, next
-            # round's join) and answers the emptiness probe — an eager
-            # checkpoint plus a separate isEmpty() would be two jobs
-            nxt = nxt.localCheckpoint(eager=False)
-            n_new = nxt.count()
-            if n_new == 0:
-                break
-            nxt = _rightsize(nxt, n_new)
-            visited = visited.unionByName(nxt)
-            n_visited += n_new
-            # next round expands only the round's DEEPEST layer
-            frontier = (
-                nxt.filter(F.col("depth") == depth) if fuse2 else nxt
-            )
-            # upper bound when fused (the deepest layer is a subset of
-            # the round's rows); exact when not
-            n_frontier = n_new
-            depth += 1
-    return visited
+        return _expand(step, visited, frontier, len(visited_local),
+                       len(frontier_ids), depth, max_depth)
 
 
 def shortest_path(edges: DataFrame, src_id: str, dst_id: str,
@@ -361,7 +345,11 @@ def var_length_expand(edges: DataFrame, start_ids: DataFrame,
     relationship-isomorphic enumeration) and dedups to the minimal
     in-window hop count: the minimal-hop BFS below would DROP an
     endpoint that is also reachable in fewer than min_hops hops
-    (diamond a->b, a->x->b with [*2..3] must still return b)."""
+    (diamond a->b, a->x->b with [*2..3] must still return b).
+
+    Runs under the session's AQE setting: Cypher reaches this from
+    concurrent REST requests, and :func:`_no_aqe` flips a
+    session-global conf."""
     if min_hops > 1:
         return (
             var_length_paths(edges, start_ids, min_hops, max_hops, t,
@@ -370,44 +358,14 @@ def var_length_expand(edges: DataFrame, start_ids: DataFrame,
             .agg(F.min("hops").alias("hops"))
         )
     step = _edges_step(edges, t, direction, edges_in)
-    frontier = start_ids.select(
+    start = start_ids.select(
         F.col(start_ids.columns[0]).alias("start_id")
-    ).withColumn("id", F.col("start_id")).withColumn("hops", F.lit(0))
-    frontier = frontier.localCheckpoint(eager=False)
-    n_frontier = frontier.count()
-    visited = frontier.select("start_id", "id", "hops")
-    n_visited = n_frontier
-    for depth in range(1, max_hops + 1):
-        nxt = (
-            step.join(
-                _maybe_broadcast(
-                    frontier.select("start_id", F.col("id").alias("from")),
-                    n_frontier,
-                ),
-                "from",
-                "inner",
-            )
-            .select("start_id", F.col("to").alias("id"))
-            .distinct()
-            .join(
-                _maybe_broadcast(
-                    visited.select("start_id", "id"), n_visited
-                ),
-                ["start_id", "id"],
-                "left_anti",
-            )
-            .withColumn("hops", F.lit(depth))
-        )
-        nxt = nxt.localCheckpoint(eager=False)  # 1 job: materialize+probe
-        n_frontier = nxt.count()
-        if n_frontier == 0:
-            break
-        nxt = _rightsize(nxt, n_frontier)
-        visited = visited.unionByName(nxt)
-        n_visited += n_frontier
-        frontier = nxt
-    return visited.filter(
-        (F.col("hops") >= min_hops) & (F.col("hops") <= max_hops)
+    ).withColumn("id", F.col("start_id")).withColumn("depth", F.lit(0))
+    start = start.localCheckpoint(eager=False)
+    n = start.count()
+    reach = _expand(step, start, start, n, n, 1, max_hops, ("start_id",))
+    return reach.withColumnRenamed("depth", "hops").filter(
+        F.col("hops") >= min_hops
     )
 
 
@@ -469,23 +427,9 @@ def var_length_paths(edges: DataFrame, start_ids: DataFrame,
     arrays are bounded (max_hops+1 ids), so row width stays small.
     Reference analogue: the declared traversal surface
     (queries_examples.txt var-length patterns)."""
-    rev = edges_in if edges_in is not None else edges
-    if t is not None:
-        edges = edges.filter(F.col("relationship") == t)
-        rev = rev.filter(F.col("relationship") == t)
-    key = F.concat_ws("\x00", "src", "relationship", "dst")
-    out = edges.select(
-        F.col("src").alias("from"), F.col("dst").alias("to"),
-        F.col("relationship").alias("rel"), key.alias("ekey"),
-    )
-    inn = rev.select(
-        F.col("dst").alias("from"), F.col("src").alias("to"),
-        F.col("relationship").alias("rel"), key.alias("ekey"),
-    )
-    step = (
-        out if direction == "out"
-        else inn if direction == "in"
-        else out.unionByName(inn)
+    step = _edges_step(
+        edges, t, direction, edges_in, rel=F.col("relationship"),
+        ekey=F.concat_ws("\x00", "src", "relationship", "dst"),
     )
     empty_arr = F.array().cast("array<string>")
     frontier = (
@@ -554,19 +498,8 @@ def all_shortest_paths(edges: DataFrame, src_id: str, dst_id: str,
     blind path enumeration. Same per-hop shuffle-join + eager
     localCheckpoint shape as bfs()."""
     spark = edges.sparkSession
-    rev = edges_in if edges_in is not None else edges
-    if t is not None:
-        edges = edges.filter(F.col("relationship") == t)
-        rev = rev.filter(F.col("relationship") == t)
-    out = edges.select(F.col("src").alias("from"), F.col("dst").alias("to"),
-                       F.col("relationship").alias("rel"))
-    inn = rev.select(F.col("dst").alias("from"), F.col("src").alias("to"),
-                     F.col("relationship").alias("rel"))
-    step = (
-        out if direction == "out"
-        else inn if direction == "in"
-        else out.unionByName(inn)
-    )
+    step = _edges_step(edges, t, direction, edges_in,
+                       rel=F.col("relationship"))
     empty_schema = "path array<string>, rels array<string>, hops int"
     if src_id == dst_id:
         return local_df(spark, [([src_id], [], 0)], empty_schema)
@@ -622,10 +555,8 @@ def connected_components_large(edges: DataFrame, max_iter: int = 30) -> DataFram
     conditional edge rewrites + dedup — all equi-shuffles on vertex id,
     no broadcast requirement, frontier-free (no driver-side growth)."""
     pairs = (
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .unionByName(
-            edges.select(F.col("dst").alias("u"), F.col("src").alias("v"))
-        )
+        _edges_step(edges, None, "both")
+        .select(F.col("from").alias("u"), F.col("to").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint(eager=True)
@@ -696,16 +627,7 @@ def weighted_sssp(edges: DataFrame, src_id: str, weight_col: str = "w",
     Only vertices whose distance improved propagate — the frontier
     shrinks as the relaxation converges, like bfs()."""
     spark = edges.sparkSession
-    e = edges if t is None else edges.filter(F.col("relationship") == t)
-    fwd = e.select(
-        F.col("src").alias("u"), F.col("dst").alias("v"),
-        F.col(weight_col).alias("w"),
-    )
-    rev = e.select(
-        F.col("dst").alias("u"), F.col("src").alias("v"),
-        F.col(weight_col).alias("w"),
-    )
-    step = {"out": fwd, "in": rev}.get(direction, fwd.unionByName(rev))
+    step = _edges_step(edges, t, direction, w=F.col(weight_col))
     dists = local_df(spark, [(src_id, 0)], "id string, dist bigint")
     frontier = dists
     n_frontier, n_dists = 1, 1
@@ -714,11 +636,11 @@ def weighted_sssp(edges: DataFrame, src_id: str, weight_col: str = "w",
             cand = (
                 step.join(
                     _maybe_broadcast(
-                        frontier.withColumnRenamed("id", "u"), n_frontier
+                        frontier.withColumnRenamed("id", "from"), n_frontier
                     ),
-                    "u",
+                    "from",
                 )
-                .select(F.col("v").alias("id"), (F.col("dist") + F.col("w")).alias("dist"))
+                .select(F.col("to").alias("id"), (F.col("dist") + F.col("w")).alias("dist"))
                 .groupBy("id")
                 .agg(F.min("dist").alias("dist"))
             )
@@ -765,10 +687,9 @@ def multi_source_bfs(edges: DataFrame, start_ids: list[str],
     """(seed, id, depth): minimal hop count from EACH seed, computed in
     ONE iterative job with the frontier keyed on (seed, id) — running
     k separate :func:`bfs` calls would pay the per-hop probe/checkpoint
-    job overhead k times over the same edge table. The per-hop plan is
-    bfs's (informed-broadcast frontier join, anti-join visited, lazy
-    checkpoint + count probe); state is k× larger, which the broadcast
-    cap already accounts for in rows."""
+    job overhead k times over the same edge table. The loop is bfs's
+    (:func:`_expand` keyed on ``seed``); state is k× larger, which the
+    broadcast cap already accounts for in rows."""
     spark = edges.sparkSession
     step = _edges_step(edges, t, direction, edges_in)
     # dedupe seeds (order-preserving): a repeated seed id would emit
@@ -778,41 +699,10 @@ def multi_source_bfs(edges: DataFrame, start_ids: list[str],
         spark, [(s, s, 0) for s in start_ids],
         "seed string, id string, depth int",
     )
-    frontier = visited
-    n_frontier = n_visited = len(start_ids)
+    n = len(start_ids)
     with _no_aqe(spark):
-        for depth in range(1, max_depth + 1):
-            nxt = (
-                step.join(
-                    _maybe_broadcast(
-                        frontier.select("seed", F.col("id").alias("from")),
-                        n_frontier,
-                    ),
-                    "from",
-                    "inner",
-                )
-                .select("seed", F.col("to").alias("id"))
-                .distinct()
-                .join(
-                    _maybe_broadcast(visited.select("seed", "id"), n_visited),
-                    ["seed", "id"],
-                    "left_anti",
-                )
-                .withColumn("depth", F.lit(depth))
-            )
-            if depth == max_depth:
-                # terminal hop — no consumer of the probe; stay lazy
-                visited = visited.unionByName(nxt)
-                break
-            nxt = nxt.localCheckpoint(eager=False)
-            n_frontier = nxt.count()
-            if n_frontier == 0:
-                break
-            nxt = _rightsize(nxt, n_frontier)
-            visited = visited.unionByName(nxt)
-            n_visited += n_frontier
-            frontier = nxt
-    return visited
+        return _expand(step, visited, visited, n, n, 1, max_depth,
+                       ("seed",))
 
 
 def closeness_seeds(edges: DataFrame, start_ids: list[str],

@@ -12,8 +12,8 @@ The reference never faces these problems (single-node KV); on a
   their shuffle entirely.
 - ``write_adjacency``: the same co-location for the resident graph,
   held in Spark's cache — vertices on id, edges on src and on dst.
-- ``degree_stats`` / ``hot_keys``: measure graph skew so the caller
-  can pick salting factors from data, not guesswork.
+- ``degree_stats``: measure graph skew so the caller can pick
+  salting factors from data, not guesswork.
 - ``repartition_by_key``: hash-distribute with a sane partition count
   derived from AQE advisory sizes.
 """
@@ -39,15 +39,6 @@ def degree_stats(edges: DataFrame, key: str = "src") -> dict:
         "p99_degree": row["p99_degree"],
         "skew_ratio": float(row["max_degree"]) / max(float(row["avg_degree"]), 1e-9),
     }
-
-
-def hot_keys(edges: DataFrame, key: str = "src", threshold: int = 1000) -> DataFrame:
-    """Keys whose degree exceeds threshold — candidates for salting."""
-    return (
-        edges.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("degree"))
-        .filter(F.col("degree") > threshold)
-    )
 
 
 def salted_join(big: DataFrame, small: DataFrame, key: str,

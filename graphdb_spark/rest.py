@@ -25,7 +25,8 @@ mutations add their summary (``"summary"``: created/deleted counts),
 as does GraphQL's parse-only detection result; a KV ``GET`` answers
 one ``value`` column. A query the engine refuses (syntax, unresolved
 names, unindexed properties) answers 400; any other failure is an
-engine fault and answers 500, in the same error envelope.
+engine fault, answers 500 in the same error envelope, and is logged
+with its traceback on this module's logger.
 
 Daemon management routes (daemon/start|stop|list, shutdown) are
 intentionally absent: they manage the reference's multi-process
@@ -36,6 +37,7 @@ replaces — SURVEY §2.9.
 from __future__ import annotations
 
 import json
+import logging
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -46,6 +48,8 @@ from graphdb_spark import __version__ as _pkg_version
 from graphdb_spark.session import KEPT_ROWS
 
 DEFAULT_ROW_LIMIT = 1000
+
+_log = logging.getLogger(__name__)
 
 
 #: errors that answer 400: ValueError covers Cypher syntax and
@@ -164,6 +168,8 @@ class _Handler(BaseHTTPRequestHandler):
             # query, an unindexed property, an unresolvable column) is
             # a 400; anything else is the engine's and a 500
             code = 400 if isinstance(exc, _CLIENT_ERRORS) else 500
+            if code == 500:
+                _log.error("engine fault on a %s query", lang, exc_info=exc)
             self._json(code, {
                 "status": "error",
                 "query_type": lang,

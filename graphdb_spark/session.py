@@ -227,8 +227,6 @@ class GraphSession:
         # the frames the last use_adjacency_layout cached; the next
         # adoption releases them
         self._layout_frames: tuple = ()
-        # enable_skew_salting fills this
-        self._hot_endpoints: dict | None = None
         # writers hold _write_lock across read-modify-set_state (it is
         # re-entrant: a Cypher DML statement may swap state twice);
         # _cache_lock guards the read plan cache's LRU bookkeeping —
@@ -462,29 +460,9 @@ class GraphSession:
         return Translator(
             self._v, self._e,
             strict_indexing=self.strict_indexing, indexed=self._indexed,
-            hot_endpoints=self._hot_endpoints,
             frontier_cache=frontier_cache,
             edges_by_key=self._e_by_key,
         )
-
-    def enable_skew_salting(self, threshold: int = 1000):
-        """Profile edge-endpoint skew (partitioning.hot_keys) and make
-        every subsequent pipe hop split super-node keys onto a
-        broadcast path (translator skew-aware hop). The hot-key lists
-        are tiny by definition (few keys exceed the threshold) and are
-        materialized once per call; re-call after heavy mutation."""
-        from graphdb_spark.partitioning import hot_keys
-
-        self._hot_endpoints = {}
-        for key in ("src", "dst"):
-            hk = (
-                hot_keys(self._e, key, threshold)
-                .select(F.col(key).alias("id"))
-                .localCheckpoint(eager=True)
-            )
-            if hk.count() > 0:
-                self._hot_endpoints[key] = hk
-        return self
 
     def sql(self, query: str) -> DataFrame:
         """SQL passthrough over the registered views (SURVEY.md §7 M5).

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, functions as F
 from graphdb_spark import algebra as A
 from graphdb_spark.datamodel import stringify_value
 from graphdb_spark.datamodel import local_df
+from graphdb_spark.operators.traversal import _maybe_broadcast
 
 
 @dataclass
@@ -55,15 +56,8 @@ class NotIndexedError(LookupError):
 class Translator:
     """Compiles Query trees against a (vertices, edges) DataFrame pair."""
 
-    #: frontiers with at most this many EXACT rows broadcast to the
-    #: hop's semi join (same threshold as traversal._maybe_broadcast —
-    #: ~50 MB of ids, well inside executor memory); bigger frontiers
-    #: fall back to shuffle joins, which is the right plan at 100 TB.
-    BROADCAST_FRONTIER_MAX = 2_000_000
-
     def __init__(self, vertices: DataFrame, edges: DataFrame,
                  strict_indexing: bool = False, indexed: set | None = None,
-                 hot_endpoints: dict | None = None,
                  informed_broadcast: bool = True,
                  frontier_cache: dict | None = None,
                  edges_by_key: dict | None = None):
@@ -78,9 +72,6 @@ class Translator:
         self.edges_by_key = edges_by_key or {}
         self.strict_indexing = strict_indexing
         self.indexed = indexed if indexed is not None else set()
-        # skew profile: {"src": hot-src-id DF, "dst": hot-dst-id DF}
-        # (GraphSession.enable_skew_salting) — hops split hot keys out
-        self.hot_endpoints = hot_endpoints or {}
         self.informed_broadcast = informed_broadcast
         # (key, query-subtree) -> materialized frontier; owned by the
         # GraphSession so repeated queries on the same immutable state
@@ -130,14 +121,13 @@ class Translator:
         from recomputing every upstream hop once per stage.
 
         Cost: one job per hop (~50 ms at gate SFs). Frontiers above
-        BROADCAST_FRONTIER_MAX stay un-broadcast shuffle joins — the
-        scale-safe fallback (a 10^9-row frontier must not be collected
-        to the driver)."""
+        traversal.BROADCAST_MAX_ROWS stay un-broadcast shuffle joins —
+        the scale-safe fallback (a 10^9-row frontier must not be
+        collected to the driver)."""
         if not self.informed_broadcast:
             return ids
         ids = ids.localCheckpoint(eager=False)
-        n = ids.count()
-        return F.broadcast(ids) if n <= self.BROADCAST_FRONTIER_MAX else ids
+        return _maybe_broadcast(ids, ids.count())
 
     def _frontier_memo(self, key, ids_thunk):
         """Memoized _frontier keyed on the query subtree (algebra nodes
@@ -234,31 +224,11 @@ class Translator:
                 # required distribution is satisfied by the scan, so a
                 # non-broadcast hop exchanges only the frontier ids
                 E = self.edges_by_key.get(key, E)
-                hot = self.hot_endpoints.get(key)
                 if small_frontier:
                     ids = F.broadcast(ids)
-                elif hot is None:
-                    ids = self._frontier_memo(("v2e", q.inner), lambda: ids)
-                if hot is not None and not small_frontier:
-                    # skew-aware hop (enable_skew_salting): a super-node
-                    # key would put its 10^n edge rows in ONE shuffle
-                    # partition. Split the frontier: the few hot ids go
-                    # through a BROADCAST semi-join (no partitioning of
-                    # the edge table by key at all — stronger than
-                    # salting for a semi-join, where the probe side is
-                    # just an id list), the cold tail through the
-                    # normal shuffle join. Union of disjoint halves.
-                    hot_ids = ids.join(F.broadcast(hot), "id", "left_semi")
-                    cold_ids = ids.join(F.broadcast(hot), "id", "left_anti")
-                    df = E.join(
-                        F.broadcast(hot_ids),
-                        E[key] == hot_ids["id"],
-                        "left_semi",
-                    ).unionByName(
-                        E.join(cold_ids, E[key] == cold_ids["id"], "left_semi")
-                    )
                 else:
-                    df = E.join(ids, E[key] == ids["id"], "left_semi")
+                    ids = self._frontier_memo(("v2e", q.inner), lambda: ids)
+                df = E.join(ids, E[key] == ids["id"], "left_semi")
                 if q.t is not None:
                     df = df.filter(F.col("relationship") == F.lit(q.t))
                 if q.limit is not None:

@@ -60,14 +60,15 @@ def graph_session(spark, sf_dir) -> GraphSession:
     key = (id(spark.sparkContext), sf_dir)
     if key not in _GRAPH_CACHE:
         v, e = tpch_graph(spark, sf_dir)
-        # FK-derived from TPC-H keys: every edge endpoint exists by
-        # construction, so the Cypher planner may elide anonymous-
-        # endpoint existence joins
-        if e.count() >= AUTO_LAYOUT_MIN_EDGES:
-            g = GraphSession(spark, v, e, assume_integrity=True)
+        # the threshold count fills the resident edge cache, and the
+        # layout is built from the cached frames: the edge lineage
+        # runs once either way
+        g = _resident(spark, v, e)
+        if g.edges.count() >= AUTO_LAYOUT_MIN_EDGES:
+            resident = (g.vertices, g.edges)
             g.use_adjacency_layout()
-        else:
-            g = _resident(spark, v, e)
+            for df in resident:
+                df.unpersist()
         _GRAPH_CACHE[key] = g
     return _GRAPH_CACHE[key]
 

@@ -47,7 +47,7 @@ def test_salted_left_join(skewed):
     )
 
 
-def test_degree_stats_and_hot_keys(spark):
+def test_degree_stats(spark):
     edges = spark.createDataFrame(
         [("hub", "E", f"v{i}", {}) for i in range(50)]
         + [("a", "E", "b", {}), ("b", "E", "c", {})],
@@ -57,8 +57,6 @@ def test_degree_stats_and_hot_keys(spark):
     assert stats["n_keys"] == 3
     assert stats["max_degree"] == 50
     assert stats["skew_ratio"] > 2
-    hot = PT.hot_keys(edges, threshold=10).collect()
-    assert [r["src"] for r in hot] == ["hub"]
 
 
 def test_bucketed_join_skips_shuffle(spark, tmp_path):
@@ -90,40 +88,6 @@ def test_repartition_by_key(spark):
     out = PT.repartition_by_key(df, "k", target_rows_per_partition=100)
     assert out.count() == 10000
     assert out.rdd.getNumPartitions() >= 4
-
-
-def test_skew_salted_hop_plan_and_results(spark):
-    """VERDICT r1 item 7: with enable_skew_salting, a pipe hop over a
-    super-node graph splits hot keys onto a broadcast semi-join while
-    the cold tail keeps the shuffle join — and results are identical
-    to the unsalted hop."""
-    from graphdb_spark.algebra import Q
-    from graphdb_spark.session import GraphSession
-
-    hub_edges = [("hub", "E", f"t{i}") for i in range(5000)]
-    tail_edges = [(f"s{i}", "E", f"t{i % 50}") for i in range(200)]
-    e = spark.createDataFrame(
-        [(s, r, d, {}) for s, r, d in hub_edges + tail_edges],
-        "src string, relationship string, dst string, properties map<string,string>",
-    )
-    ids = {x for s, _r, d in hub_edges + tail_edges for x in (s, d)}
-    v = spark.createDataFrame(
-        [(i, "N", {}) for i in sorted(ids)],
-        "id string, label string, properties map<string,string>",
-    )
-    g = GraphSession(spark, v, e)
-    q = Q.vertices().outbound().inbound().count()
-    plain = g.get(q)[-1].count
-
-    g.enable_skew_salting(threshold=1000)
-    assert set(getattr(g, "_hot_endpoints", {})) == {"src"}
-    salted = g.get(q)[-1].count
-    assert salted == plain
-
-    hop_df = g.df(Q.vertices().outbound())
-    plan = hop_df._jdf.queryExecution().executedPlan().toString()
-    assert "Union" in plan, plan[:2000]
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
 def test_partitioned_write_prunes_directories(spark, tmp_path):
@@ -337,7 +301,17 @@ def test_adjacency_layout_elides_edge_exchange(spark, adj_graph):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
 
 
-def test_graph_session_auto_layout_policy(spark, monkeypatch):
+def _private_sf(tmp_path):
+    """A copy of the sf0.001 tables under its own path. Spark keys its
+    cache by plan, so frames read from the copy share no cache entry
+    with the session-wide resident graph, which a layout adoption
+    releasing its resident frames would otherwise drop."""
+    import shutil
+
+    return str(shutil.copytree("/root/testdata/sf0.001", tmp_path / "sf"))
+
+
+def test_graph_session_auto_layout_policy(spark, monkeypatch, tmp_path):
     """graph_session adopts the layout at cache time when the edge
     count clears AUTO_LAYOUT_MIN_EDGES (threshold forced to 1 here),
     results matching the plain session, and writes no table; below
@@ -348,7 +322,7 @@ def test_graph_session_auto_layout_policy(spark, monkeypatch):
 
     from graphdb_spark.workloads import graph as G
 
-    sf = "/root/testdata/sf0.001"
+    sf = _private_sf(tmp_path)
     saved = dict(G._GRAPH_CACHE)
     warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
 
@@ -379,6 +353,51 @@ def test_graph_session_auto_layout_policy(spark, monkeypatch):
     finally:
         G._GRAPH_CACHE.clear()
         G._GRAPH_CACHE.update(saved)
+
+
+@pytest.mark.parametrize("layout", [False, True], ids=["plain", "layout"])
+def test_graph_session_runs_edge_lineage_once(spark, monkeypatch, tmp_path,
+                                             layout):
+    """Setting up the resident graph evaluates the edge lineage once,
+    below the layout threshold and above it: the threshold count fills
+    the resident edge cache and the layout is laid out from it. A
+    counting filter on the edges runs one pass over them."""
+    from pyspark.sql.functions import udf
+
+    from graphdb_spark.workloads import graph as G
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def tap(_src):
+        seen.add(1)
+        return True
+
+    tapped = udf(tap, "boolean")
+    load = G.tpch_graph
+
+    def probed(spark_, sf_dir):
+        v, e = load(spark_, sf_dir)
+        return v, e.filter(tapped("src"))
+
+    sf = _private_sf(tmp_path)
+    # one pass's worth: the filter may be pushed below the edges'
+    # dedup, so it can see more rows than the edges hold
+    assert probed(spark, sf)[1].count() == 7442
+    one_pass = seen.value
+    monkeypatch.setattr(G, "tpch_graph", probed)
+    monkeypatch.setattr(G, "_GRAPH_CACHE", {})
+    if layout:
+        monkeypatch.setattr(G, "AUTO_LAYOUT_MIN_EDGES", 0)
+    g = G.graph_session(spark, sf)
+    try:
+        assert bool(g._e_by_key) == layout
+        # read after a scan of the resident edges, which must not run
+        # the lineage again
+        assert g.edge_count() == 7442
+        assert seen.value == 2 * one_pass
+    finally:
+        for df in (g.vertices, g.edges, *g._e_by_key.values()):
+            df.unpersist()
 
 
 def test_traversals_route_through_layout(spark, adj_graph):

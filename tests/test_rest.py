@@ -6,6 +6,7 @@ lib.rs:266-290)."""
 from __future__ import annotations
 
 import json
+import logging
 import urllib.request
 
 import pytest
@@ -92,20 +93,31 @@ def test_invalid_query_is_400_not_500(server):
     (ValueError("Cypher syntax error"), 400),
     (LookupError("property is not indexed"), 400),
 ], ids=["engine_fault", "value_error", "lookup_error"])
-def test_engine_fault_is_500_client_error_400(server, monkeypatch,
+def test_engine_fault_is_500_client_error_400(server, monkeypatch, caplog,
                                               error, code):
-    """A failure of the engine itself answers 500; only the client's
-    own errors answer 400. Both keep the error envelope."""
+    """A failure of the engine itself answers 500 and is logged with
+    its traceback; only the client's own errors answer 400, unlogged.
+    Both keep the error envelope."""
     def fail(_query):
         raise error
 
     monkeypatch.setattr(server._httpd.graph, "execute", fail)
-    got, body = _post(server.url + "/api/v1/query", {
-        "query": "MATCH (c:customer) RETURN count(c) AS n",
-    })
+    with caplog.at_level(logging.ERROR, logger="graphdb_spark.rest"):
+        got, body = _post(server.url + "/api/v1/query", {
+            "query": "MATCH (c:customer) RETURN count(c) AS n",
+        })
     assert (got, body["status"], body["query_type"]) == (
         code, "error", "Cypher")
     assert body["message"] == f"{type(error).__name__}: {error}"
+    errors = [r for r in caplog.records if r.name == "graphdb_spark.rest"
+              and r.levelno >= logging.ERROR]
+    if code == 500:
+        assert len(errors) == 1
+        assert "Cypher" in errors[0].getMessage()
+        assert errors[0].exc_info[1] is error
+        assert "Traceback" in caplog.text
+    else:
+        assert errors == []
 
 
 def test_missing_query_field_is_400(server):

@@ -197,11 +197,11 @@ def test_frontier_memo_invalidated_by_mutation(spark):
 
 
 def test_big_frontier_not_broadcast(spark):
-    """Frontiers above BROADCAST_FRONTIER_MAX keep the shuffle join —
+    """Frontiers above traversal.BROADCAST_MAX_ROWS keep the shuffle join —
     the scale-safe path for 10^9-row frontiers."""
     from graphdb_spark import Q
+    from graphdb_spark.operators import traversal
     from graphdb_spark.session import GraphSession
-    from graphdb_spark.translator import Translator
 
     n = 500
     v = spark.createDataFrame(
@@ -213,8 +213,8 @@ def test_big_frontier_not_broadcast(spark):
         "src string, relationship string, dst string, properties map<string,string>",
     )
     g = GraphSession.from_dataframes(spark, v, e)
-    old = Translator.BROADCAST_FRONTIER_MAX
-    Translator.BROADCAST_FRONTIER_MAX = 10  # force the big-frontier path
+    old = traversal.BROADCAST_MAX_ROWS
+    traversal.BROADCAST_MAX_ROWS = 10  # force the big-frontier path
     try:
         q = Q.vertices_with_property_value("k", "1").outbound().inbound()
         df = g.df(q)
@@ -224,4 +224,4 @@ def test_big_frontier_not_broadcast(spark):
         optimized = df._jdf.queryExecution().optimizedPlan().toString()
         assert "ResolvedHint" not in optimized
     finally:
-        Translator.BROADCAST_FRONTIER_MAX = old
+        traversal.BROADCAST_MAX_ROWS = old

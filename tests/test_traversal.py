@@ -26,23 +26,6 @@ def test_bfs_depths(chain_graph):
     assert got == {"a": 0, "b": 1, "c": 2, "x": 2, "d": 3, "e": 4}
 
 
-def test_bfs_two_hops_per_round_matches(chain_graph):
-    """hops_per_round=2 (fused probe rounds) must be result-identical
-    to the per-hop loop at even AND odd depths, including the cycle.
-    frontier_pushdown off so the DISTRIBUTED loops are what's compared
-    (pushdown would absorb a unit-scale graph entirely)."""
-    for depth in (1, 2, 3, 4, 5, 10):
-        one = {(r["id"], r["depth"])
-               for r in T.bfs(chain_graph, "a", max_depth=depth,
-                              max_branch=2, hops_per_round=1,
-                              frontier_pushdown=False).collect()}
-        two = {(r["id"], r["depth"])
-               for r in T.bfs(chain_graph, "a", max_depth=depth,
-                              max_branch=2, hops_per_round=2,
-                              frontier_pushdown=False).collect()}
-        assert one == two, f"fused BFS diverged at max_depth={depth}"
-
-
 def test_bfs_pushdown_matches_distributed(chain_graph):
     """The phase-1 frontier-predicate pushdown (driver-side visited
     set, IN-list hops) must be result-identical to the distributed
@@ -360,3 +343,80 @@ def test_session_bfs_uses_memoized_branch_bound(spark):
     # mutation invalidates the bound
     g.set_state(edges=e.limit(1))
     assert g.max_branch("out") == 1
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs it ran), counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"t{uuid.uuid4().hex[:12]}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def cyclic_graph(spark):
+    """Two cycles (a->b->c->a, b->d->e->b), a tail e->f and an
+    unreachable-from-a source x->a."""
+    edges = [("a", "b"), ("b", "c"), ("c", "a"), ("b", "d"), ("d", "e"),
+             ("e", "b"), ("e", "f"), ("x", "a")]
+    return spark.createDataFrame(
+        [(s, "N", d, {}) for s, d in edges],
+        "src string, relationship string, dst string, "
+        "properties map<string,string>",
+    )
+
+
+@pytest.mark.parametrize("keyed_in", [False, True], ids=["one_copy", "dst_copy"])
+@pytest.mark.parametrize("direction", ["out", "in", "both"])
+def test_reachability_traversals_agree(spark, cyclic_graph, direction,
+                                       keyed_in):
+    """bfs's distributed loop, single-seed multi_source_bfs and
+    var_length_expand(1..d) plus the start row share one frontier loop:
+    the same (id, depth) rows, with or without a dst-keyed edges_in."""
+    edges_in = (cyclic_graph.repartition(3, "dst").sortWithinPartitions("dst")
+                if keyed_in else None)
+    d = 4
+    one = sorted(
+        (r["id"], r["depth"])
+        for r in T.bfs(cyclic_graph, "a", max_depth=d, direction=direction,
+                       frontier_pushdown=False, edges_in=edges_in).collect()
+    )
+    multi = sorted(
+        (r["id"], r["depth"])
+        for r in T.multi_source_bfs(cyclic_graph, ["a"], max_depth=d,
+                                    direction=direction,
+                                    edges_in=edges_in).collect()
+    )
+    starts = spark.createDataFrame([("a",)], "id string")
+    expand = sorted(
+        [("a", 0)] + [
+            (r["id"], r["hops"])
+            for r in T.var_length_expand(cyclic_graph, starts, 1, d,
+                                         direction=direction,
+                                         edges_in=edges_in).collect()
+        ]
+    )
+    assert one == multi == expand
+    assert len({i for i, _ in one}) == len(one)  # one row per vertex
+    assert ("a", 0) in one and len(one) > 3
+
+
+def test_var_length_expand_last_hop_stays_lazy(spark, cyclic_graph):
+    """With max_hops=1 building the expansion runs only the jobs of
+    counting its start frame: the one hop has no probe."""
+    starts = spark.createDataFrame([("a",)], "id string")
+    _, start_jobs = _jobs(
+        spark, lambda: T.var_length_expand(cyclic_graph, starts, 1, 0))
+    reach, jobs = _jobs(
+        spark, lambda: T.var_length_expand(cyclic_graph, starts, 1, 1))
+    assert start_jobs > 0
+    assert jobs == start_jobs
+    assert sorted((r["id"], r["hops"]) for r in reach.collect()) == [("b", 1)]
