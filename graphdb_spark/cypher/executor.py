@@ -1393,7 +1393,8 @@ class _Executor:
                         & (F.col("dst") == dst)
                     )
                 ).unionByName(
-                    self.g.spark.createDataFrame(
+                    local_df(
+                        self.g.spark,
                         [(src, rel_t, dst, normalize_properties(props))],
                         "src string, relationship string, dst string, "
                         "properties map<string,string>",

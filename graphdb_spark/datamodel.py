@@ -116,16 +116,61 @@ def normalize_properties(props: dict | None) -> dict[str, str]:
 
 
 def local_df(spark, data, schema):
-    """createDataFrame for driver-local data.
+    """Driver-local rows as a ``LocalRelation`` leaf: the one audited
+    construction point for every driver-local frame.
 
-    Deliberately a plain passthrough: small createDataFrame results are
-    LocalRelations with accurate stats (driver-side broadcast, no scan
-    tasks), and wrapping them in coalesce/repartition REPLACES the
-    LocalRelation with an RDD scan the planner can't see through —
-    measured 7× slower traversals at sf0.1 when the BFS seed carried a
-    coalesce(1). Kept as a helper so every driver-local frame shares
-    one audited construction point."""
-    return spark.createDataFrame(data, schema)
+    ``schema`` is a DDL string, a ``StructType`` or a list of column
+    names (types then come from PySpark's own row inference, as
+    ``createDataFrame`` infers them). Rows are checked against the
+    schema exactly as ``createDataFrame`` checks them, then handed to
+    the JVM as one Arrow table.
+
+    Why not ``createDataFrame(rows, schema)``: in classic PySpark that
+    is a ``LogicalRDD`` whose size estimate is ``Long.MaxValue`` (the
+    planner never broadcasts it), and every action that scans it runs
+    a stage that re-pickles the rows through Python workers (collecting
+    one row is a Spark job, and the first one forks ``pyspark.daemon``).
+    An Arrow table below ``spark.sql.execution.arrow.localRelationThreshold``
+    becomes a ``LocalRelation`` with exact stats instead: the same
+    collect runs no job. Wrapping the result in coalesce/repartition
+    would replace that leaf with an RDD scan again — measured 7× slower
+    traversals at sf0.1 when the BFS seed carried a coalesce(1)."""
+    import datetime
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import (
+        TimestampType,
+        _create_converter,
+        _make_type_verifier,
+        _parse_datatype_string,
+    )
+
+    rows = list(data)
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    elif isinstance(schema, (list, tuple)):
+        inferred = spark._inferSchemaFromList(rows, names=list(schema))
+        schema = StructType([
+            StructField(name, f.dataType, f.nullable)
+            for name, f in zip(schema, inferred.fields)
+        ])
+    verify, convert = _make_type_verifier(schema), _create_converter(schema)
+    for r in rows:
+        verify(r)
+    cols = list(zip(*map(convert, rows))) or [()] * len(schema.fields)
+    arrow = to_arrow_schema(schema)
+    arrays = []
+    for col, f, af in zip(cols, schema.fields, arrow):
+        if isinstance(f.dataType, TimestampType):
+            # as the row path reads them: a naive datetime is local
+            # wall-clock time (time.mktime), an aware one its instant.
+            # Arrow reads naive values as UTC, so hand it UTC instants
+            col = [v if v is None else v.astimezone(datetime.timezone.utc)
+                   for v in col]
+        arrays.append(pa.array(col, type=af.type))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, schema=arrow), schema)
 
 
 def scratch_dir(prefix: str) -> str:

@@ -46,6 +46,34 @@ def degrees(edges: DataFrame) -> DataFrame:
     )
 
 
+def _contribs(links: DataFrame, ranks: DataFrame, verts: DataFrame,
+              n: int) -> DataFrame:
+    """(id, contrib) for every vertex: the sum over its in-links of
+    rank/out_degree, 0.0 where it has none. One ``(id, 0.0)`` row per
+    vertex is unioned into the contributions, so a single aggregate
+    covers every vertex without a join back to ``verts``; exact,
+    because x + 0.0 == x.
+
+    ``links`` and ``ranks`` are checkpoint RDDs without size stats, so
+    Spark would shuffle the whole link table every iteration; the rank
+    table is exactly ``n`` rows, so it is broadcast while provably
+    small."""
+    from graphdb_spark.operators.traversal import _maybe_broadcast
+
+    return (
+        links.join(
+            _maybe_broadcast(ranks.withColumnRenamed("id", "src"), n), "src"
+        )
+        .select(
+            F.col("dst").alias("id"),
+            (F.col("rank") / F.col("out_degree")).alias("c"),
+        )
+        .unionByName(verts.select("id", F.lit(0.0).alias("c")))
+        .groupBy("id")
+        .agg(F.sum("c").alias("contrib"))
+    )
+
+
 def pagerank(edges: DataFrame, iterations: int = 10,
              damping: float = 0.85) -> DataFrame:
     """(id, rank) with ranks summing to the vertex count (GraphX
@@ -67,34 +95,15 @@ def pagerank(edges: DataFrame, iterations: int = 10,
         .join(out_deg.withColumnRenamed("id", "src"), "src")
         .localCheckpoint(eager=True)
     )
-    # links/ranks are checkpoint-RDDs without size stats — Spark would
-    # shuffle the full link table every iteration; the rank table is
-    # exactly n rows, so broadcast it while provably small
-    from graphdb_spark.operators.traversal import _maybe_broadcast
-
     for _ in range(iterations):
-        contribs = (
-            links.join(
-                _maybe_broadcast(ranks.withColumnRenamed("id", "src"), n),
-                "src",
-            )
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("rank") / F.col("out_degree")).alias("c"),
-            )
-            .groupBy("id")
-            .agg(F.sum("c").alias("contrib"))
-        )
         # materialize BEFORE the normalizer (as hits()._norm does): the
         # raw ranks feed both the 1-row total and the row-wise divide;
         # unmaterialized, each iteration doubles the plan of all the
         # earlier ones
-        raw = verts.join(_maybe_broadcast(contribs, n), "id", "left").select(
+        raw = _contribs(links, ranks, verts, n).select(
             "id",
-            (
-                F.lit(1 - damping)
-                + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-            ).alias("rank"),
+            (F.lit(1 - damping) + F.lit(damping) * F.col("contrib"))
+            .alias("rank"),
         ).localCheckpoint(eager=True)
         # dangling mass: renormalize so sum(rank) == n (GraphX-like).
         # The 1-row total stays IN the plan (broadcast crossJoin) — no
@@ -452,29 +461,13 @@ def personalized_pagerank(edges: DataFrame, source_ids: list[str],
         .join(out_deg.withColumnRenamed("id", "src"), "src")
         .localCheckpoint(eager=True)
     )
-    from graphdb_spark.operators.traversal import _maybe_broadcast
-
     is_src = F.col("id").isin(list(source_ids)).cast("double")
     ranks = verts.withColumn("rank", is_src)
     for i in range(iterations):
-        contribs = (
-            links.join(
-                _maybe_broadcast(ranks.withColumnRenamed("id", "src"), n),
-                "src",
-            )
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("rank") / F.col("out_degree")).alias("c"),
-            )
-            .groupBy("id")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        new_ranks = verts.join(_maybe_broadcast(contribs, n), "id", "left").select(
+        new_ranks = _contribs(links, ranks, verts, n).select(
             "id",
-            (
-                F.lit(1 - damping) * is_src
-                + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-            ).alias("rank"),
+            (F.lit(1 - damping) * is_src + F.lit(damping) * F.col("contrib"))
+            .alias("rank"),
         )
         ranks = (
             new_ranks.localCheckpoint(eager=True)

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from graphdb_spark.datamodel import local_df
 from graphdb_spark.operators.text import MERSENNE, h64
 
 
@@ -298,8 +299,8 @@ def kmeans_centroids(embeddings: DataFrame, n_cells: int,
     centers = [
         (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
     ]
-    return embeddings.sparkSession.createDataFrame(
-        centers, "cid bigint, cvec array<double>"
+    return local_df(
+        embeddings.sparkSession, centers, "cid bigint, cvec array<double>"
     )
 
 

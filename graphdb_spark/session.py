@@ -50,6 +50,28 @@ def default_driver_memory(phys_bytes: int) -> str:
     return f"{min(phys_bytes // 2, 16 << 30) >> 20}m"
 
 
+def max_result_size(driver_mem: str) -> str:
+    """``spark.driver.maxResultSize`` for a driver heap given as a JVM
+    memory string (``"2g"``, ``"7680m"``; a bare number is MiB, as
+    Spark reads ``spark.driver.memory``): half of the heap, in whole
+    MiB. A cap above the heap lets one oversized collect exhaust the
+    heap instead of failing its job."""
+    m = re.fullmatch(r"(\d+)([kmgtp]?)b?", driver_mem.strip().lower())
+    if m is None:
+        raise ValueError(f"not a JVM memory string: {driver_mem!r}")
+    exp = "kmgtp".index(m[2]) + 1 if m[2] else 2
+    return f"{max(int(m[1]) << (10 * exp) >> 21, 1)}m"
+
+
+#: entries of Spark's generated-class cache (a static conf; Spark's
+#: default is 100). One analytics_batch pass over the benchmark graph
+#: generates 300-315 distinct classes, so at 100 every warm pass
+#: evicted and Janino-compiled 260-264 of them again (CodegenMetrics,
+#: 4-core VM); at 1000 the second warm pass compiles none, and
+#: metaspace stays within the default's run-to-run range
+CODEGEN_CACHE_ENTRIES = 1000
+
+
 def build_spark(app_name: str = "graphdb_spark", master: str | None = None,
                 shuffle_partitions: int | None = None) -> SparkSession:
     """Opinionated SparkSession for this engine.
@@ -76,7 +98,9 @@ def build_spark(app_name: str = "graphdb_spark", master: str | None = None,
             os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE"))
     spark = (
         b.config("spark.driver.memory", driver_mem)
-        .config("spark.driver.maxResultSize", "4g")
+        .config("spark.driver.maxResultSize", max_result_size(driver_mem))
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

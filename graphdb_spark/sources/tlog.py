@@ -60,6 +60,8 @@ from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from graphdb_spark.datamodel import local_df
+
 LOG_DIR = "_tlog"
 _TMP_PREFIX = ".tmp-"
 
@@ -264,7 +266,7 @@ def read(spark, path: str, version: int | None = None) -> DataFrame:
     schema = T.StructType.fromJson(rec["schema"])
     files = [os.path.join(path, f) for f in rec["files"]]
     if not files:
-        return spark.createDataFrame([], schema)
+        return local_df(spark, [], schema)
     return spark.read.schema(schema).parquet(*files)
 
 

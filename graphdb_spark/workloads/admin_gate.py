@@ -911,8 +911,8 @@ def tlog_merge_timetravel(spark, sf_dir):
     updates = (
         nation.filter(F.col("regionkey") == 1)
         .withColumn("name", F.lower("name"))
-        .unionByName(spark.createDataFrame(
-            [(100, "newland", 0), (101, "newmark", 0)],
+        .unionByName(local_df(
+            spark, [(100, "newland", 0), (101, "newmark", 0)],
             "id int, name string, regionkey int",
         ))
     )

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from graphdb_spark.datamodel import local_df
 from graphdb_spark.operators import similarity as S
 from graphdb_spark.sources.tpch import load_tables
 
@@ -776,7 +777,8 @@ def emb_mmr_selection(spark, sf_dir):
             )
             .localCheckpoint(eager=False)
         )
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(r, int(v), float(rel), float(ms), float(mm))
          for r, v, rel, ms, mm in picked],
         "rank int, vec_id bigint, rel double, sel_maxsim double, mmr double",
@@ -922,7 +924,8 @@ def emb_mmr_batched(spark, sf_dir):
             )
             .localCheckpoint(eager=False)
         )
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(r, int(v), float(rel), float(ms), float(mm))
          for r, v, rel, ms, mm in picked],
         "rank int, vec_id bigint, rel double, sel_maxsim double, mmr double",

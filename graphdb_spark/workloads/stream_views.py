@@ -38,6 +38,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
+from graphdb_spark.datamodel import local_df
 from graphdb_spark.session import GraphSession
 from graphdb_spark.sources.tpch import load_tables
 from graphdb_spark.streaming.graph_updates import fold_changes
@@ -786,7 +787,7 @@ def stream_incremental_dedup(spark, sf_dir):
     # seed an EMPTY signature store so batch 0's probe is a normal
     # (zero-candidate) plan, not a special case
     sig_schema = minhash_signatures(docs.limit(0)).schema
-    spark.createDataFrame([], sig_schema).write.mode("overwrite").parquet(
+    local_df(spark, [], sig_schema).write.mode("overwrite").parquet(
         store
     )
 

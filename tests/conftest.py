@@ -1,8 +1,23 @@
 import os
+import uuid
 
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+
+
+def count_jobs(spark, fn):
+    """(fn(), number of Spark jobs it ran), counted by job group."""
+    sc = spark.sparkContext
+    group = f"t{uuid.uuid4().hex[:12]}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

@@ -6,28 +6,14 @@ from __future__ import annotations
 
 import threading
 import time
-import uuid
 
 import pytest
+from conftest import count_jobs as _jobs
 
 from graphdb_spark.rest import _df_payload
 from graphdb_spark.session import GraphSession
 
 LOOKUP = "MATCH (c:customer {id: 'c_7'}) RETURN c.id, c.mktsegment"
-
-
-def _jobs(spark, fn):
-    """(fn(), number of Spark jobs it ran), counted by job group."""
-    sc = spark.sparkContext
-    group = f"t{uuid.uuid4().hex[:12]}"
-    sc.setJobGroup(group, "job count")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # the status store is fed by the listener bus: drain it first
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _ungrouped_jobs(spark, fn):

@@ -1,7 +1,10 @@
 """GraphSession facade: language-detecting execute() (QueryExecEngine
 equivalent) + analytics method surface."""
 
+import datetime
+
 import pytest
+from conftest import count_jobs
 
 
 def test_execute_detects_cypher(person_graph):
@@ -142,16 +145,86 @@ def test_build_spark_sizes_heap_from_ram_unless_pinned(monkeypatch):
                 sparkContext=types.SimpleNamespace(defaultParallelism=4),
             )
 
-    def heap(**env):
+    def conf(**env):
         b = Builder()
         monkeypatch.setattr(SparkSession, "builder", b)
         for k, v in env.items():
             monkeypatch.setenv(k, v)
         S.build_spark("t", master="local[1]")
-        return b.conf["spark.driver.memory"]
+        return b.conf
+
+    def heap(**env):
+        c = conf(**env)
+        return c["spark.driver.memory"], c["spark.driver.maxResultSize"]
 
     pages = {"SC_PHYS_PAGES": (12 << 30) // 4096, "SC_PAGE_SIZE": 4096}
     monkeypatch.setattr(os, "sysconf", pages.__getitem__)
     monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
-    assert heap() == "6144m"
-    assert heap(SPARK_GRAFT_DRIVER_MEM="3g") == "3g"
+    # the result cap is half of the heap, pinned or derived
+    assert heap() == ("6144m", "3072m")
+    assert heap(SPARK_GRAFT_DRIVER_MEM="3g") == ("3g", "1536m")
+    assert heap(SPARK_GRAFT_DRIVER_MEM="2048") == ("2048", "1024m")
+    assert conf()["spark.sql.codegen.cache.maxEntries"] == "1000"
+
+
+@pytest.mark.parametrize("mem, cap", [
+    ("2g", "1024m"), ("7680m", "3840m"), ("1T", "524288m"),
+    ("4096k", "2m"), ("2gb", "1024m"), ("1m", "1m"),
+])
+def test_max_result_size_is_half_the_heap(mem, cap):
+    from graphdb_spark.session import max_result_size
+
+    assert max_result_size(mem) == cap
+
+
+def test_max_result_size_rejects_a_non_memory_string():
+    from graphdb_spark.session import max_result_size
+
+    with pytest.raises(ValueError):
+        max_result_size("lots")
+
+
+def test_live_session_holds_the_codegen_cache_size(spark):
+    """The cache size is a static conf: it only takes effect if the
+    session was built with it."""
+    from graphdb_spark.session import CODEGEN_CACHE_ENTRIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == \
+        str(CODEGEN_CACHE_ENTRIES)
+
+
+_TS = datetime.datetime(2020, 1, 2, 3, 4, 5)
+
+
+@pytest.mark.parametrize("rows, schema, expected, types", [
+    ([("a", 1, 1 << 40), (None, None, None)], "s string, i int, b bigint",
+     [("a", 1, 1 << 40), (None, None, None)], ["string", "int", "bigint"]),
+    ([("v", {"k": "x"}), ("w", None)], "id string, p map<string,string>",
+     [("v", {"k": "x"}), ("w", None)], ["string", "map<string,string>"]),
+    ([(["x", None],), (None,)], "a array<string>",
+     [(["x", None],), (None,)], ["array<string>"]),
+    ([], "id string, depth int", [], ["string", "int"]),
+    ([(1,), (2,)], ["x"], [(1,), (2,)], ["bigint"]),
+    ([("a",)], ["y"], [("a",)], ["string"]),
+    # a naive datetime is local wall-clock time, as createDataFrame
+    # reads it; an aware one is its instant
+    ([(_TS,), (_TS.replace(tzinfo=datetime.timezone.utc),),
+      (None,)], "ts timestamp",
+     [(int(_TS.timestamp()),), (1577934245,), (None,)], ["timestamp"]),
+], ids=["scalars", "map", "array", "empty", "names_long", "names_string",
+        "timestamp"])
+def test_local_df_is_a_local_relation(spark, rows, schema, expected, types):
+    """Driver-local rows become a LocalRelation leaf with exactly the
+    given rows, and collecting them runs no Spark job (an RDD-backed
+    frame, or a silent fallback to one, runs at least one)."""
+    from graphdb_spark.datamodel import local_df
+
+    df = local_df(spark, rows, schema)
+    leaf = df._jdf.queryExecution().analyzed()
+    assert leaf.getClass().getSimpleName() == "LocalRelation"
+    assert [f.dataType.simpleString() for f in df.schema.fields] == types
+    if types == ["timestamp"]:
+        df = df.selectExpr("CAST(ts AS BIGINT) AS ts")
+    got, jobs = count_jobs(spark, df.collect)
+    assert [tuple(r) for r in got] == expected
+    assert jobs == 0

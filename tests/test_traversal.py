@@ -3,6 +3,7 @@ traversal.rs:31-36), shortestPath and var-length expansion
 (queries_examples.txt:109-118), connected components."""
 
 import pytest
+from conftest import count_jobs as _jobs
 
 from graphdb_spark.operators import traversal as T
 
@@ -343,22 +344,6 @@ def test_session_bfs_uses_memoized_branch_bound(spark):
     # mutation invalidates the bound
     g.set_state(edges=e.limit(1))
     assert g.max_branch("out") == 1
-
-
-def _jobs(spark, fn):
-    """(fn(), number of Spark jobs it ran), counted by job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"t{uuid.uuid4().hex[:12]}"
-    sc.setJobGroup(group, "job count")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # the status store is fed by the listener bus: drain it first
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="module")
